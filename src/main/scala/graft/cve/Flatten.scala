@@ -18,14 +18,20 @@ object Flatten {
   def readFeed(spark: SparkSession, paths: String*): DataFrame =
     spark.read.option("multiLine", "true").schema(NvdSchema.feed).json(paths: _*)
 
+  private def envelope = Seq(
+    col("CVE_data_timestamp").as("feed_timestamp"),
+    col("CVE_data_version").as("feed_version"),
+    col("CVE_data_format").as("feed_format"),
+    col("CVE_data_numberOfCVEs").as("feed_count"),
+    col("CVE_data_type").as("feed_type"))
+
   /** Feed-envelope metadata probe (S5, cve_manager.py:240-244). */
-  def feedMetadata(feed: DataFrame): DataFrame =
-    feed.select(
-      col("CVE_data_timestamp").as("feed_timestamp"),
-      col("CVE_data_version").as("feed_version"),
-      col("CVE_data_format").as("feed_format"),
-      col("CVE_data_numberOfCVEs").as("feed_count"),
-      col("CVE_data_type").as("feed_type"))
+  def feedMetadata(feed: DataFrame): DataFrame = feed.select(envelope: _*)
+
+  /** `feedMetadata` led by the feed's file name, over
+    * `Ingest.readFeedDirByFile`: the whole per-file report in one job. */
+  def feedMetadataByFile(feed: DataFrame): DataFrame =
+    feed.select(col(Ingest.FeedFile) +: envelope: _*)
 
   private def items(feed: DataFrame): DataFrame =
     feed.select(explode(col("CVE_Items")).as("it"))

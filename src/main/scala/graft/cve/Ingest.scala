@@ -1,17 +1,24 @@
 package graft.cve
 
-import java.io.{ByteArrayOutputStream, File}
+import java.io.File
+import java.nio.charset.StandardCharsets.UTF_8
 import java.util.zip.ZipInputStream
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{element_at, spark_partition_id, typedLit}
 
 /** Source side of EP1 (cve_manager.py:172-245): feed enumeration/download
   * (S1/S2), directory scan (S3), and the zip→JSON source (S4).
   *
-  * Scale posture: each per-year feed zip is one `binaryFiles` partition —
-  * unzip + parse run distributed, one task per file, and the items never
+  * Scale posture: each feed file is one task — one `binaryFiles` RDD per
+  * file, unioned largest first — so unzip + parse run distributed and the
+  * biggest year starts first instead of finishing last. The items never
   * accumulate in driver memory (the reference holds ALL years in one Python
-  * list, cve_manager.py:245 — its scalability cliff).
+  * list, cve_manager.py:245 — its scalability cliff). One `binaryFiles`
+  * over the glob packed small zips into ONE split: the 24-feed nvd-load
+  * benchmark parsed in 1 task at `ingest.busy_frac` 0.22, per file in 24
+  * tasks at 0.55 (PERF.md "Single-pass ingest").
   */
 object Ingest {
 
@@ -55,37 +62,72 @@ object Ingest {
     }
   }
 
+  /** Column that `readFeedDirByFile` adds to the feed schema: the name of
+    * the file each parsed feed came from. */
+  val FeedFile = "feed_file"
+
   /** S4 (zip path): distributed zip→JSON. Reads the FIRST zip member of each
-    * archive (cve_manager.py:237-239) as one JSON document string, then
-    * applies the explicit feed schema. One task per archive. */
+    * archive (cve_manager.py:237-239) as one JSON document, then applies the
+    * explicit feed schema. One task per archive, largest first. */
   def readZippedFeeds(spark: SparkSession, pathGlob: String): DataFrame = {
-    import spark.implicits._
-    val docs = spark.sparkContext.binaryFiles(pathGlob).map { case (_, pds) =>
-      val zin = new ZipInputStream(pds.open())
-      try {
-        zin.getNextEntry // first member only, like the reference
-        val out = new ByteArrayOutputStream()
-        val buf = new Array[Byte](1 << 16)
-        var n = zin.read(buf)
-        while (n >= 0) { out.write(buf, 0, n); n = zin.read(buf) }
-        new String(out.toByteArray, "UTF-8")
-      } finally zin.close()
-    }.toDS()
-    spark.read.schema(NvdSchema.feed).json(docs)
+    val p = new Path(pathGlob)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files = Option(fs.globStatus(p)).getOrElse(Array.empty)
+      .filter(f => f.isFile && visible(f.getPath.getName))
+    require(files.nonEmpty, s"no feed archives match $pathGlob")
+    parseFeeds(spark, files.toSeq).drop(FeedFile)
   }
 
   /** S4+S6: read every feed in a directory — extracted `.json` files and/or
-    * `.json.zip` archives — as ONE DataFrame (the reference's union-all
-    * accumulation, cve_manager.py:245, via multi-path read + unionByName). */
-  def readFeedDir(spark: SparkSession, dir: String): DataFrame = {
+    * `.zip` archives — as ONE DataFrame (the reference's union-all
+    * accumulation, cve_manager.py:245). */
+  def readFeedDir(spark: SparkSession, dir: String): DataFrame =
+    readFeedDirByFile(spark, dir).drop(FeedFile)
+
+  /** `readFeedDir` with each feed's file name in column `FeedFile`, so one
+    * parse can serve the per-file envelope report and the flatten. */
+  def readFeedDirByFile(spark: SparkSession, dir: String): DataFrame = {
+    val d = new Path(dir)
+    val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val files = listFeedFiles(dir)
-    val jsons = files.filter(_.endsWith(".json")).map(f => s"$dir/$f")
-    val zips = files.filter(_.endsWith(".zip"))
-    val parts = Seq(
-      if (jsons.nonEmpty) Some(Flatten.readFeed(spark, jsons: _*)) else None,
-      if (zips.nonEmpty) Some(readZippedFeeds(spark, s"$dir/*.zip")) else None
-    ).flatten
-    require(parts.nonEmpty, s"no .json or .json.zip feed files in $dir")
-    parts.reduce(_ unionByName _)
+      .filter(f => (f.endsWith(".json") || f.endsWith(".zip")) && visible(f))
+      .map(f => fs.getFileStatus(new Path(d, f)))
+    require(files.nonEmpty, s"no .json or .json.zip feed files in $dir")
+    parseFeeds(spark, files)
+  }
+
+  /** binaryFiles' input filter rejects hidden names (`.x`, `_x`); they are
+    * skipped, as a glob read over the directory skips them. */
+  private def visible(name: String): Boolean =
+    !name.startsWith(".") && !name.startsWith("_")
+
+  /** One `binaryFiles` RDD per file, unioned in descending size order so
+    * partition i is the i-th largest file and the scheduler starts the
+    * biggest parse first (binaryFiles keeps Spark's input metrics). A `.zip`
+    * contributes its first member; anything else is read as UTF-8 JSON.
+    * The file name comes from the partition index, which the JSON scan
+    * keeps; parsing with `from_json` instead would let the optimizer inline
+    * the parse into the filter `explode` infers, parsing each document
+    * twice. */
+  private def parseFeeds(spark: SparkSession, files: Seq[FileStatus]): DataFrame = {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val ordered = files.sortBy(f => (-f.getLen, f.getPath.getName))
+    val docs = sc.union(ordered.map { f =>
+      val zipped = f.getPath.getName.endsWith(".zip")
+      sc.binaryFiles(f.getPath.toString).map { case (_, pds) =>
+        if (zipped) firstMember(pds.open()) else new String(pds.toArray(), UTF_8)
+      }
+    }).toDS()
+    spark.read.schema(NvdSchema.feed).json(docs).withColumn(FeedFile,
+      element_at(typedLit(ordered.map(_.getPath.getName)), spark_partition_id() + 1))
+  }
+
+  private def firstMember(in: java.io.InputStream): String = {
+    val zin = new ZipInputStream(in)
+    try {
+      zin.getNextEntry // first member only, like the reference
+      new String(zin.readAllBytes(), UTF_8)
+    } finally zin.close()
   }
 }

@@ -1,7 +1,7 @@
 package graft.cve
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.Sessions
 
@@ -117,33 +117,36 @@ object Main {
     }
     if (o.process) {
       out("Processing downloaded data")
-      // Per-file envelope report, newest year first (files.sort(reverse=True)
-      // + the per-file prints, cve_manager.py:233-244). listFeedFiles is
-      // already descending; each probe is a single-task job over one feed
-      // file, so the loop stays linear in file count (~1/year).
-      Ingest.listFeedFiles(o.input)
-        .filter(f => f.endsWith(".json") || f.endsWith(".json.zip"))
-        .foreach { f =>
-          out(s"\nProcessing $f")
-          val one =
-            if (f.endsWith(".zip")) Ingest.readZippedFeeds(spark, s"${o.input}/$f")
-            else Flatten.readFeed(spark, s"${o.input}/$f")
-          Flatten.feedMetadata(one).collect().foreach { r =>
-            out(s"CVE_data_timestamp: ${r.get(0)}")
-            out(s"CVE_data_version: ${r.get(1)}")
-            out(s"CVE_data_format: ${r.get(2)}")
-            out(s"CVE_data_number of CVEs: ${r.get(3)}")
-            out(s"CVE_data_type: ${r.get(4)}")
+      // The feed directory parses ONCE, one task per file, largest first;
+      // the envelope report and every write below read that parse. It is
+      // held for this step only, so the next `-p` reads its feeds afresh.
+      val feed = Ingest.readFeedDirByFile(spark, o.input)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      try {
+        // Per-file envelope report, newest year first (files.sort(reverse=True)
+        // + the per-file prints, cve_manager.py:233-244): one collect, printed
+        // in listFeedFiles' descending order.
+        val envelopes = Flatten.feedMetadataByFile(feed).collect().groupBy(_.getString(0))
+        Ingest.listFeedFiles(o.input)
+          .filter(f => f.endsWith(".json") || f.endsWith(".json.zip"))
+          .foreach { f =>
+            out(s"\nProcessing $f")
+            envelopes.getOrElse(f, Array.empty).foreach { r =>
+              out(s"CVE_data_timestamp: ${r.get(1)}")
+              out(s"CVE_data_version: ${r.get(2)}")
+              out(s"CVE_data_format: ${r.get(3)}")
+              out(s"CVE_data_number of CVEs: ${r.get(4)}")
+              out(s"CVE_data_type: ${r.get(5)}")
+            }
           }
+        val (cvss, problems, cpes) =
+          (Flatten.cvss(feed), Flatten.problems(feed), Flatten.cpes(feed))
+        if (o.csv) Warehouse.writeWarehouseCsvs(cvss, problems, cpes, o.results)
+        if (o.idb) o.jdbcUrl match {
+          case Some(url) => Warehouse.saveFactsJdbc(url, cvss, problems, cpes)
+          case None => Warehouse.saveFacts(spark, db, cvss, problems, cpes)
         }
-      val feed = Ingest.readFeedDir(spark, o.input)
-      val (cvss, problems, cpes) =
-        (Flatten.cvss(feed), Flatten.problems(feed), Flatten.cpes(feed))
-      if (o.csv) Warehouse.writeWarehouseCsvs(cvss, problems, cpes, o.results)
-      if (o.idb) o.jdbcUrl match {
-        case Some(url) => Warehouse.saveFactsJdbc(url, cvss, problems, cpes)
-        case None => Warehouse.saveFacts(spark, db, cvss, problems, cpes)
-      }
+      } finally feed.unpersist()
     }
     o.icwe.foreach { path =>
       out("Importing CWE data")

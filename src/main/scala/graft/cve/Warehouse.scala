@@ -77,11 +77,17 @@ object Warehouse {
     // cvss is partitioned by publication year (the natural per-year-feed
     // layout, SURVEY.md §4): date-floor queries prune whole year partitions
     // at planning time (Queries.byScoreDate adds the pub_year predicate).
-    cvss.withColumn("pub_year", year(col("published_date")))
+    // The writers set their layout from the data, not from the input's
+    // partitioning (one per feed file): hashing on pub_year gives one writer
+    // task — one file — per year directory, and AQE's rebalance coalesces
+    // the other two tables by bytes.
+    val withYear = cvss.withColumn("pub_year", year(col("published_date")))
+    withYear.repartition(withYear("pub_year"))
       .write.mode(SaveMode.Overwrite).partitionBy("pub_year")
       .saveAsTable(s"$db.cvss")
-    problems.write.mode(SaveMode.Overwrite).saveAsTable(s"$db.cve_problem")
-    cpes.write.mode(SaveMode.Overwrite).saveAsTable(s"$db.cpe")
+    problems.hint("rebalance").write.mode(SaveMode.Overwrite)
+      .saveAsTable(s"$db.cve_problem")
+    cpes.hint("rebalance").write.mode(SaveMode.Overwrite).saveAsTable(s"$db.cpe")
     spark.sql(
       s"""CREATE OR REPLACE VIEW $db.cvss_vs_cpes AS
          |SELECT cvss.cve, cvss.base_score_3, cvss.base_severity_3,
@@ -290,11 +296,13 @@ object Warehouse {
 
   /** S7: the three tab-CSV warehouse files with exact reference headers.
     * Each lands as a directory of part files (distributed write — the
-    * scale-correct default); `singleFile` coalesces for byte-golden tests. */
+    * scale-correct default, rebalanced by AQE so the part count follows
+    * bytes, not input partitions); `singleFile` coalesces for byte-golden
+    * tests. */
   def writeWarehouseCsvs(
       cvss: DataFrame, problems: DataFrame, cpes: DataFrame,
       outDir: String, singleFile: Boolean = false): Unit = {
-    def prep(df: DataFrame) = if (singleFile) df.coalesce(1) else df
+    def prep(df: DataFrame) = if (singleFile) df.coalesce(1) else df.hint("rebalance")
     writeTabCsv(prep(cvss), CvssHeader, s"$outDir/cve_cvss_scores.csv")
     writeTabCsv(prep(problems), ProblemsHeader, s"$outDir/cve_related_problems.csv")
     writeTabCsv(prep(cpes), CpesHeader, s"$outDir/cve_cpes.csv")

@@ -153,8 +153,11 @@ object GraftFunctions {
     spark.sessionState.functionRegistry.registerFunction(
       FunctionIdentifier("graft_topk"),
       new ExpressionInfo(classOf[TopKRows].getName, "graft_topk"),
-      (children: Seq[Expression]) =>
-        TopKRows(children(0), children(1), children(2)))
+      (children: Seq[Expression]) => children match {
+        case Seq(score, id, k) => TopKRows(score, id, k)
+        case other => throw new IllegalArgumentException(
+          s"graft_topk expects 3 arguments (score, id, k), got ${other.size}")
+      })
     // Spark's runtime-filter bloom primitives as callable functions (q105);
     // both sides hash via XxHash64 (same default seed), matching the
     // InjectRuntimeFilter rule's own construction.

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 /** Persisted index state for the incremental operators — the production
   * gap the r6 verdict named: q80 derives the standing corpus's LSH band
@@ -384,17 +385,25 @@ object IndexStore {
         // the standing file count: compacting a table with fewer files
         // than shuffle partitions used to re-spread it WIDER — a file-
         // count increase from a verb whose contract is folding appends
-        // (surfaced when the test session went 2 → 8 cores, r18).
-        val nFiles = {
+        // (surfaced when the test session went 2 → 8 cores, r18). Nor is
+        // the file count itself a reason to shrink: the bound on folding
+        // is bytes, one file per AQE advisory partition size, so a run of
+        // small appends folds to one file while an already-compact table
+        // keeps its file count and repeated compactions are idempotent.
+        val (nFiles, bytes) = {
           val it = fs.listFiles(cur, true)
           var n = 0
+          var b = 0L
           while (it.hasNext) {
-            if (it.next().getPath.getName.startsWith("part-")) n += 1
+            val f = it.next()
+            if (f.getPath.getName.startsWith("part-")) { n += 1; b += f.getLen }
           }
-          n
+          (n, b)
         }
+        val byBytes = math.ceil(bytes.toDouble / spark.sessionState.conf
+          .getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)).toInt
         val width = if (parts > 0) parts
-          else math.max(1, math.min(writeParallelism(spark), nFiles - 1))
+          else math.max(1, Seq(writeParallelism(spark), nFiles, byBytes).min)
         val r =
           if (rangeKeyed) compacted.repartitionByRange(width,
             sortCols.map(col): _*)

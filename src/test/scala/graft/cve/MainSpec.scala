@@ -148,4 +148,117 @@ class MainSpec extends AnyFunSuite {
       assert(o3.exists(_ === "CVE queries"))
     } finally Warehouse.dropDatabase(spark, db)
   }
+
+  // ── Single-pass ingest: `-p` parses the feed directory once ──
+
+  /** `n` copies of the fixture feed as years 2001.., zip and json
+    * alternating, each with its own envelope timestamp. */
+  private def feedDir(n: Int): String = {
+    val dir = Files.createTempDirectory("clifeeds").toString
+    val json = new String(Files.readAllBytes(
+      new java.io.File(CveOps.FixtureFeed).toPath), "UTF-8")
+    (1 to n).foreach { i =>
+      val y = 2000 + i
+      val doc = json.replace("2024-06-01T07:00Z", s"$y-06-01T07:00Z").getBytes("UTF-8")
+      if (i % 2 == 0) {
+        val z = new java.util.zip.ZipOutputStream(
+          new java.io.FileOutputStream(s"$dir/nvdcve-1.1-$y.json.zip"))
+        z.putNextEntry(new java.util.zip.ZipEntry(s"nvdcve-1.1-$y.json"))
+        z.write(doc); z.closeEntry(); z.close()
+      } else Files.write(new java.io.File(s"$dir/nvdcve-1.1-$y.json").toPath, doc)
+    }
+    dir
+  }
+
+  private def load(in: String, db: String): (Seq[String], String) = {
+    val results = Files.createTempDirectory("clifeedsout").toString
+    (runCli("-p", "-csv", "-idb", "-i", in, "-o", results, "-db", db), results)
+  }
+
+  private def jobsDuring(work: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try { work; Thread.sleep(500) } // listener bus is async; drain
+    finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get()
+  }
+
+  test("-p -csv -idb: Spark jobs per load do not grow with the feed count") {
+    val db = "graft_cli_jobs"
+    try {
+      val jobs = Seq(2, 6).map(n => n -> jobsDuring(load(feedDir(n), db)))
+      assert(jobs.map(_._2).distinct.size === 1, s"jobs by feed count: $jobs")
+    } finally Warehouse.dropDatabase(spark, db)
+  }
+
+  test("-p reads each feed file once; its envelope report is the per-file probe's, newest first") {
+    val db = "graft_cli_once"
+    val in = feedDir(6)
+    val feedBytes = new java.io.File(in).listFiles().map(_.length).sum
+    // The local filesystem's statistics appear on its first use.
+    def bytesRead = Option(org.apache.hadoop.fs.FileSystem.getGlobalStorageStatistics
+      .get("file")).fold(0L)(_.getLong("bytesRead").longValue)
+    try {
+      val before = bytesRead
+      val (lines, _) = load(in, db)
+      val reads = (bytesRead - before).toDouble / feedBytes
+      // The per-file probe plus six writes re-parsing the directory read
+      // the feeds 9 times (the cpe flatten is a two-branch union).
+      assert(reads > 0.5 && reads < 1.5, s"feed bytes read $reads times")
+
+      // The old per-file probe loop, as the reference of what each block prints.
+      val files = Ingest.listFeedFiles(in)
+      assert(files === files.sorted.reverse && files.size === 6)
+      val want = files.flatMap { f =>
+        val one =
+          if (f.endsWith(".zip")) Ingest.readZippedFeeds(spark, s"$in/$f")
+          else Flatten.readFeed(spark, s"$in/$f")
+        s"\nProcessing $f" +: Flatten.feedMetadata(one).collect().toSeq.flatMap { r =>
+          Seq(s"CVE_data_timestamp: ${r.get(0)}", s"CVE_data_version: ${r.get(1)}",
+            s"CVE_data_format: ${r.get(2)}", s"CVE_data_number of CVEs: ${r.get(3)}",
+            s"CVE_data_type: ${r.get(4)}")
+        }
+      }
+      assert(lines === "Processing downloaded data" +: want)
+      assert(lines(2) === "CVE_data_timestamp: 2006-06-01T07:00Z")
+    } finally Warehouse.dropDatabase(spark, db)
+  }
+
+  test("-p warehouse layout: one cvss file per pub_year, no more files than before") {
+    def files(dir: java.io.File, suffix: String): Int =
+      Option(dir.listFiles()).getOrElse(Array.empty).count(f => f.isFile &&
+        f.getName.startsWith("part-") && f.getName.endsWith(suffix))
+    def location(db: String, t: String) = new java.io.File(
+      spark.sessionState.catalog.getTableMetadata(
+        org.apache.spark.sql.catalyst.TableIdentifier(t, Some(db))).location)
+    // Part-file counts the per-file-probe loader wrote for the same inputs,
+    // measured on that code: cvss per year dir, cve_problem, cpe, then the
+    // cvss, problems and cpes CSV sinks. Its writers inherited the feed
+    // read's splits, and cpe's two-branch union doubled them.
+    val single = Files.createTempDirectory("clilayout").toString
+    Files.copy(new java.io.File(CveOps.FixtureFeed).toPath,
+      new java.io.File(s"$single/nvdcve-1.1-2024.json").toPath)
+    val cases = Seq(
+      single -> Seq(1, 1, 2, 1, 1, 2),
+      feedDir(6) -> Seq(4, 4, 8, 4, 4, 8))
+    cases.zipWithIndex.foreach { case ((in, before), i) =>
+      val db = s"graft_cli_layout$i"
+      try {
+        val (_, results) = load(in, db)
+        val years = location(db, "cvss").listFiles().filter(_.getName.startsWith("pub_year="))
+        assert(years.length === 6)
+        years.foreach(y => assert(files(y, ".parquet") === 1, y.getName))
+        val got = Seq(
+          files(location(db, "cve_problem"), ".parquet"),
+          files(location(db, "cpe"), ".parquet")) ++
+          Seq("cve_cvss_scores.csv", "cve_related_problems.csv", "cve_cpes.csv")
+            .map(n => files(new java.io.File(s"$results/$n"), ".csv"))
+        got.zip(before.tail).foreach { case (g, b) => assert(g <= b, s"$got vs $before") }
+      } finally Warehouse.dropDatabase(spark, db)
+    }
+  }
 }

@@ -81,4 +81,17 @@ class TopKRowsSpec extends AnyFunSuite {
       !plan.contains("DeserializeToObject"))
     assert(plan.contains("ObjectHashAggregate"))
   }
+
+  test("wrong arity: a clean error naming (score, id, k), not an index crash") {
+    import spark.implicits._
+    val df = rows(10).toDF("g", "id", "sc")
+    for (args <- Seq("sc, id", "sc, id, 3, 4")) {
+      val e = intercept[Exception](
+        df.groupBy("g").agg(expr(s"graft_topk($args)")).collect())
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).toList
+      assert(msgs.exists(_.contains("graft_topk expects 3 arguments (score, id, k)")),
+        s"$args: ${msgs.mkString(" | ")}")
+    }
+  }
 }

@@ -715,6 +715,33 @@ class IndexStoreSpec extends AnyFunSuite {
     assert(parquetFiles(ivf, "ivf/vectors") < ivfFiles)
   }
 
+  test("compaction is idempotent: compacting a compact table keeps its file count") {
+    val emb = Vectors.withNormalized(Tables.embeddings(spark, sf))
+      .select(col("vec_id"), col("en"))
+    val pq = tmp("pq-recompact")
+    IndexStore.savePqIndex(emb.filter(col("vec_id") % 4 === 0), pq)
+    (1 to 3).foreach(i =>
+      IndexStore.appendPqBatch(emb.filter(col("vec_id") % 4 === i), pq))
+    def hits() = IndexStore.searchPq(emb, pq, 0L, 5)
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toList
+    val before = hits()
+    // A 1 KB fold target makes this small table "big": its compact layout
+    // is several files, which a re-compaction used to shrink by one each.
+    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "1k")
+    try {
+      IndexStore.compactPqIndex(spark, pq)
+      val compact = parquetFiles(pq, "pq/codes")
+      assert(compact > 1, "fixture must compact to more than one file")
+      (1 to 2).foreach { i =>
+        IndexStore.compactPqIndex(spark, pq)
+        assert(parquetFiles(pq, "pq/codes") === compact, s"after re-compaction $i")
+      }
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(hits() === before)
+  }
+
   test("compaction swap repairs a crash window (restore from .old) — ADVICE r14") {
     val docs = Tables.load(spark, sf, "documents")
     val path = tmp("crash-repair")
