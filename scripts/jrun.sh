@@ -1,6 +1,9 @@
 #!/bin/bash
 # Run a graft main class directly (no sbt) — same JVM flags as build.sbt.
 # Usage: jrun.sh <MainClass> [args...]   (env: SPARK_GRAFT_* honored)
+# Classes come from the sbt build of the checkout this script lives in,
+# Spark's jars from $SPARK_HOME/jars.
+classes="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)/target/scala-2.13/classes"
 exec java \
   --add-opens java.base/java.lang=ALL-UNNAMED \
   --add-opens java.base/java.lang.invoke=ALL-UNNAMED \
@@ -17,5 +20,5 @@ exec java \
   --add-opens java.base/sun.util.calendar=ALL-UNNAMED \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -Xmx${SPARK_DRIVER_MEM:-8g} \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "$classes:${SPARK_HOME:?SPARK_HOME must point at the Spark install}/jars/*" \
   "$@"

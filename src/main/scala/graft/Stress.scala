@@ -72,7 +72,8 @@ import org.apache.spark.sql.functions._
   *     parent's rare vocabulary, so sibling pairs collide on shingles far
   *     more than cross-parent pairs — that growth is corpus content, so
   *     the split is reported like annknn's. Gated CROSS-parent pairs/doc
-  *     staying flat certifies the O(len²) levenshtein stage sees a linear
+  *     staying flat certifies the levenshtein stage (bit-parallel,
+  *     O(⌈len/64⌉·len) per pair) sees a linear
   *     candidate volume, never corpus².
   *
   *   snapdiff <sfDir> <mult>

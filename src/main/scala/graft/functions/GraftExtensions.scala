@@ -1,108 +1,103 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo, XxHash64}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo, Literal, XxHash64}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+import org.apache.spark.sql.types.IntegerType
 
 /** Library-grade registration: add
   * `spark.sql.extensions=graft.functions.GraftExtensions` to the session
   * conf and every engine function is available in SQL and `call_function`
   * without imperative per-session setup — the idiomatic way a Spark library
   * ships Catalyst extensions. (GraftFunctions.register stays for sessions
-  * built without the conf.)
+  * built without the conf.) Both paths install the same
+  * `GraftFunctions.table`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      (children: Seq[Expression]) => DotProduct(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_simhash60"),
-      new ExpressionInfo(classOf[SimHash60].getName, "graft_simhash60"),
-      (children: Seq[Expression]) => SimHash60(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_minhash12"),
-      new ExpressionInfo(classOf[MinHash12].getName, "graft_minhash12"),
-      (children: Seq[Expression]) => MinHash12(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_winnow"),
-      new ExpressionInfo(classOf[WinnowFps].getName, "graft_winnow"),
-      (children: Seq[Expression]) => WinnowFps(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_phashsig"),
-      new ExpressionInfo(classOf[PhashSig].getName, "graft_phashsig"),
-      (children: Seq[Expression]) => children match {
-        case Seq(c) => PhashSig(c)
-        case Seq(c, org.apache.spark.sql.catalyst.expressions.Literal(b: Int,
-            org.apache.spark.sql.types.IntegerType)) => PhashSig(c, b)
-        case Seq(c, org.apache.spark.sql.catalyst.expressions.Literal(b: Int,
-            org.apache.spark.sql.types.IntegerType),
-            org.apache.spark.sql.catalyst.expressions.Literal(d: Int,
-            org.apache.spark.sql.types.IntegerType)) => PhashSig(c, b, d)
-        case other if other.size < 1 || other.size > 3 =>
-          throw new IllegalArgumentException(
-            s"graft_phashsig expects (words[, bins-literal[, depth-literal]]), got ${other.size} args")
-        case other =>
-          // Arity is fine — the bins/depth argument just isn't an INT
-          // literal (r10 ADVICE: "got N args" misled SQL users passing
-          // foldable expressions like 8*2, which Catalyst has not folded
-          // at function-build time).
-          throw new IllegalArgumentException(
-            "graft_phashsig bins/depth arguments must be INT literals " +
-              s"(constant expressions are not folded at registration); got: " +
-              other.drop(1).map(_.sql).mkString(", "))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_hash60"),
-      new ExpressionInfo(classOf[Hash60].getName, "graft_hash60"),
-      (children: Seq[Expression]) => Hash60(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_gramhashes"),
-      new ExpressionInfo(classOf[GramHashes].getName, "graft_gramhashes"),
-      (children: Seq[Expression]) => GramHashes(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_gramstrings"),
-      new ExpressionInfo(classOf[GramStrings].getName, "graft_gramstrings"),
-      (children: Seq[Expression]) => GramStrings(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_cmsbuckets"),
-      new ExpressionInfo(classOf[CmsBuckets].getName, "graft_cmsbuckets"),
-      (children: Seq[Expression]) =>
-        CmsBuckets(children(0), children(1), children(2))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_l2norm"),
-      new ExpressionInfo(classOf[L2Normalize].getName, "graft_l2norm"),
-      (children: Seq[Expression]) => L2Normalize(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_repstats"),
-      new ExpressionInfo(classOf[RepStats].getName, "graft_repstats"),
-      (children: Seq[Expression]) => RepStats(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_srpkeys"),
-      new ExpressionInfo(classOf[SrpKeys].getName, "graft_srpkeys"),
-      (children: Seq[Expression]) => SrpKeys(children(0), children(1), children(2))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_hrw"),
-      new ExpressionInfo(classOf[Hrw].getName, "graft_hrw"),
-      (children: Seq[Expression]) => Hrw.build(children)))
-    // Spark's own runtime-filter primitives, surfaced as callable functions
-    // (q105 bloom decontamination): the agg builds the sketch over
-    // xxhash64(value) exactly as the InjectRuntimeFilter rule does, and
-    // might_contain hashes with the same seed, so the two always agree.
-    ext.injectFunction((
-      FunctionIdentifier("graft_bloom_agg"),
-      new ExpressionInfo(classOf[BloomFilterAggregate].getName, "graft_bloom_agg"),
-      (children: Seq[Expression]) =>
-        new BloomFilterAggregate(new XxHash64(Seq(children(0))), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_might_contain"),
-      new ExpressionInfo(classOf[BloomFilterMightContain].getName, "graft_might_contain"),
-      (children: Seq[Expression]) =>
-        BloomFilterMightContain(children(0), new XxHash64(Seq(children(1))))))
+    GraftFunctions.table.foreach { case (name, cls, build) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), build))
+    }
     // Declarative aggregate(zip_with(...)) dot folds → codegen'd DotProduct
     // (bit-identical; see DotFoldRewrite).
     ext.injectOptimizerRule(_ => DotFoldRewrite)
   }
+}
+
+object GraftFunctions {
+  private type Builder = Seq[Expression] => Expression
+
+  /** A fixed-arity entry: the wrong argument count is a clean
+    * IllegalArgumentException naming the signature, not an index crash
+    * inside the builder. */
+  private def fn(name: String, cls: Class[_], params: String*)(
+      build: Seq[Expression] => Expression): (String, Class[_], Builder) =
+    (name, cls, children => {
+      if (children.size != params.size) throw new IllegalArgumentException(
+        s"$name expects ${params.size} argument${if (params.size == 1) "" else "s"} " +
+          s"(${params.mkString(", ")}), got ${children.size}")
+      build(children)
+    })
+
+  private def phashSig(children: Seq[Expression]): Expression = children match {
+    case Seq(c) => PhashSig(c)
+    case Seq(c, Literal(b: Int, IntegerType)) => PhashSig(c, b)
+    case Seq(c, Literal(b: Int, IntegerType), Literal(d: Int, IntegerType)) =>
+      PhashSig(c, b, d)
+    case other if other.size < 1 || other.size > 3 =>
+      throw new IllegalArgumentException(
+        s"graft_phashsig expects (words[, bins-literal[, depth-literal]]), got ${other.size} args")
+    case other =>
+      // Arity is fine — the bins/depth argument just isn't an INT literal
+      // ("got N args" misled SQL users passing foldable expressions like
+      // 8*2, which Catalyst has not folded at function-build time).
+      throw new IllegalArgumentException(
+        "graft_phashsig bins/depth arguments must be INT literals " +
+          s"(constant expressions are not folded at registration); got: " +
+          other.drop(1).map(_.sql).mkString(", "))
+  }
+
+  /** The one (name, expression class, builder) table behind both
+    * registration paths (`GraftExtensions` and `register`). */
+  val table: Seq[(String, Class[_], Builder)] = Seq(
+    fn("graft_dot", classOf[DotProduct], "a", "b")(c => DotProduct(c(0), c(1))),
+    fn("graft_simhash60", classOf[SimHash60], "words")(c => SimHash60(c(0))),
+    fn("graft_minhash12", classOf[MinHash12], "words")(c => MinHash12(c(0))),
+    fn("graft_winnow", classOf[WinnowFps], "words")(c => WinnowFps(c(0))),
+    ("graft_phashsig", classOf[PhashSig], phashSig),
+    fn("graft_hash60", classOf[Hash60], "s")(c => Hash60(c(0))),
+    fn("graft_gramhashes", classOf[GramHashes], "words", "n")(
+      c => GramHashes(c(0), c(1))),
+    fn("graft_gramstrings", classOf[GramStrings], "words", "n")(
+      c => GramStrings(c(0), c(1))),
+    fn("graft_cmsbuckets", classOf[CmsBuckets], "v", "d", "w")(
+      c => CmsBuckets(c(0), c(1), c(2))),
+    fn("graft_l2norm", classOf[L2Normalize], "v")(c => L2Normalize(c(0))),
+    fn("graft_repstats", classOf[RepStats], "words")(c => RepStats(c(0))),
+    fn("graft_srpkeys", classOf[SrpKeys], "en", "planes", "r")(
+      c => SrpKeys(c(0), c(1), c(2))),
+    ("graft_hrw", classOf[Hrw], Hrw.build),
+    fn("graft_topk", classOf[TopKRows], "score", "id", "k")(
+      c => TopKRows(c(0), c(1), c(2))),
+    fn("graft_levenshtein", classOf[EditDistance], "a", "b")(
+      c => EditDistance(c(0), c(1))),
+    fn("graft_bucket_pairs", classOf[BucketPairs], "ds")(c => BucketPairs(c(0))),
+    // Spark's own runtime-filter primitives, surfaced as callable functions
+    // (q105 bloom decontamination): the agg builds the sketch over
+    // xxhash64(value) exactly as the InjectRuntimeFilter rule does, and
+    // might_contain hashes with the same seed, so the two always agree.
+    fn("graft_bloom_agg", classOf[BloomFilterAggregate], "value", "expected-items")(
+      c => new BloomFilterAggregate(new XxHash64(Seq(c(0))), c(1))),
+    fn("graft_might_contain", classOf[BloomFilterMightContain], "bloom", "value")(
+      c => BloomFilterMightContain(c(0), new XxHash64(Seq(c(1))))))
+
+  /** Idempotent per-session registration; call from any entry point, then
+    * invoke via `call_function("graft_dot", ...)` etc. */
+  def register(spark: SparkSession): Unit =
+    table.foreach { case (name, cls, build) =>
+      spark.sessionState.functionRegistry.registerFunction(
+        FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build)
+    }
 }

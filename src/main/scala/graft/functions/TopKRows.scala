@@ -8,8 +8,13 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
 /** Bounded top-k buffer: k best (score DESC, id ASC) pairs, insertion-
-  * sorted. O(k) memory; O(k) worst-case insert (k is small — ≤ 50 at
-  * every call site), O(1) reject for rows worse than the current k-th. */
+  * sorted. O(k) memory; O(k) worst-case insert, O(1) reject for rows
+  * worse than the current k-th. k is a literal 5 or 20 at the catalog
+  * sites (MatK, RetrK, q79) but corpus-scaled in the PQ/IVFPQ store
+  * re-rankers: IndexStore.autoRerank passes max(100, n/2000) unless the
+  * caller gives an explicit depth — 100 at every harness scale, 1000 at
+  * 2M vectors, and unbounded above that — so an insert there can shift
+  * up to ~n/2000 entries. */
 final class TopKState(val k: Int) {
   var n: Int = 0
   val scores: Array[Long] = new Array[Long](k)

@@ -139,6 +139,27 @@ object Audit {
         countDistinct("first_doc").as("n_first_docs"))
   }
 
+  /** The authority loop's edge barrier: (src, dst, sh) with sh the
+    * fixed-point share of src's out-weight `ow` (from `outw`), checkpointed
+    * PRE-PARTITIONED on `src` — the key every round's contribution join
+    * probes — so the standing |E|-layout is reused round after round (the
+    * rank side, the small one, is what moves); without it each of the
+    * RankRounds joins re-exchanged the edge-share frame (r18, VERDICT r17
+    * #4). The partition COUNT is explicit (the session's shuffle-partition
+    * knob) and the barrier goes through Sessions.checkpointPartitioned —
+    * a plain checkpoint under AQE captures UnknownPartitioning off the
+    * adaptive root and the layout was silently lost (caught in
+    * plans/r18/auth_round_*), exactly like Dedup.symmetricEdges. PlanSpec's
+    * layout canary pins `hashpartitioning(src)` on the result. */
+  private[graft] def shareEdges(edges: DataFrame, outw: DataFrame): DataFrame =
+    Sessions.checkpointPartitioned(edges.join(outw, Seq("src"))
+      .select(col("src"), col("dst"),
+        expr(s"CASE WHEN ow <= ${ShareScale * ShareScale}" +
+          s" THEN (w * $ShareScale) div ow" +
+          s" ELSE w div (ow div $ShareScale) END").as("sh"))
+      .repartition(
+        edges.sparkSession.sessionState.conf.numShufflePartitions, col("src")))
+
   /** q170's fixed-point PageRank iteration, factored over an arbitrary
     * (src, dst, w) edge frame and a (source) node list — shared by the
     * in-query q170 (edges from `shadowMatrix`) and the from-store q172
@@ -167,24 +188,7 @@ object Audit {
     // outw feeds the share build, the dangling flag, and the final out_w
     // join; |sources|-bounded, so the barrier is catalog-sized.
     val outw = edges.groupBy("src").agg(sum("w").as("ow")).localCheckpoint(true)
-    // r18 (VERDICT r17 #4): the share frame is checkpointed PRE-PARTITIONED
-    // on `src` — the key every round's contribution join probes — so the
-    // standing |E|-layout is reused round after round (the rank side, the
-    // small one, is what moves); without it each of the RankRounds joins
-    // re-exchanged the edge-share frame. The partition COUNT is explicit
-    // (the session's shuffle-partition knob) and the barrier goes through
-    // Sessions.checkpointPartitioned — a plain checkpoint under AQE
-    // captures UnknownPartitioning off the adaptive root and the layout
-    // was silently lost (caught in plans/r18/auth_round_*; the fixed
-    // dumps show the esh-side Exchange gone from the round join), exactly
-    // like connectedComponents' symmetric-frame barrier.
-    val esh = Sessions.checkpointPartitioned(edges.join(outw, Seq("src"))
-      .select(col("src"), col("dst"),
-        expr(s"CASE WHEN ow <= ${ShareScale * ShareScale}" +
-          s" THEN (w * $ShareScale) div ow" +
-          s" ELSE w div (ow div $ShareScale) END").as("sh"))
-      .repartition(
-        edges.sparkSession.sessionState.conf.numShufflePartitions, col("src")))
+    val esh = shareEdges(edges, outw)
     val ncnt = nodes.agg(count(lit(1)).as("n"))
     // Rank frame schema: (source, r, n, seed, haslinks). n and seed are
     // constant per node; haslinks=false marks the dangling nodes (no

@@ -74,11 +74,13 @@ object Dedup {
   val EditTau = 0.5
   /** q91 candidate gate: ≥ this many shared informative shingles before
     * any Levenshtein runs. The inverted index emits every pair sharing
-    * ONE rare shingle — 1.13M pairs at sf0.1, where Levenshtein's
-    * O(len²)-per-pair cost is a measured cliff (the un-gated bench ran
-    * minutes, not seconds). inter ≥ 3 keeps every observed edit-dup at
-    * both test scales (min inter over sim≥0.5 pairs is exactly 3) and
-    * cuts candidates 110× (10.3k at sf0.1, ~2/doc — linear in corpus). */
+    * ONE rare shingle — 1.13M pairs at sf0.1; with the quadratic DP
+    * Levenshtein that ran minutes, not seconds, and even the bit-parallel
+    * `graft_levenshtein` (O(⌈len/64⌉·len) per pair, ~18 µs per gated pair
+    * of ~420 chars, PERF.md) would pay ~20 s of CPU on them. inter ≥ 3
+    * keeps every observed edit-dup at both test scales (min inter over
+    * sim≥0.5 pairs is exactly 3) and cuts candidates 110× (10.3k at
+    * sf0.1, ~2/doc — linear in corpus). */
   val EditMinInter = 3
 
   /** q96/q97 deterministic corpus split: CONTENT-hash bucket (md5 of the
@@ -538,12 +540,18 @@ object Dedup {
   private[graft] def dfCappedBuckets(docs: DataFrame): DataFrame =
     allBuckets(docs).filter(size(col("ds")).between(2, MaxDf))
 
-  private def bucketPairs(buckets: DataFrame): DataFrame =
-    buckets.select(explode(expr(
-        "flatten(transform(ds, (x, i) -> transform(slice(ds, i + 2, size(ds)), y -> struct(x AS a, y AS b))))"
-      )).as("p"))
+  /** (a, b, inter): every within-bucket id pair with a < b (`ds` is
+    * sorted) and the number of buckets it shares. The fan-out is the
+    * codegen'd `graft_bucket_pairs` — the interpreted
+    * `flatten(transform(ds, (x, i) -> transform(slice(ds, i + 2,
+    * size(ds)), y -> struct(x AS a, y AS b))))` lambda it replaced is
+    * pinned equal by EngineProperties. */
+  private def bucketPairs(buckets: DataFrame): DataFrame = {
+    graft.functions.GraftFunctions.register(buckets.sparkSession)
+    buckets.select(explode(call_function("graft_bucket_pairs", col("ds"))).as("p"))
       .groupBy(col("p.a").as("a"), col("p.b").as("b"))
       .agg(count(lit(1)).as("inter"))
+  }
 
   /** (a, b, inter) with a < b, WITHOUT per-doc sizes: callers that only
     * gate on the intersection count (q91) stop here — `indexedPairs` adds
@@ -633,6 +641,33 @@ object Dedup {
        |  JOIN sizes zb ON zb.doc_id = p.b
        |  WHERE p.inter / least(za.sz, zb.sz) >= $tau)""".stripMargin
 
+  /** The connected-components edge barrier: the symmetric (a, b) edge
+    * frame, built in ONE scan (an explode of both directions; the old
+    * unionByName form read the edge lineage twice), hash-partitioned on
+    * the propagation join key `b` and checkpointed once. Every round's
+    * neighbor join then reuses the standing |E|-partitioning instead of
+    * re-exchanging the edge frame per round (the |V|-sized label side is
+    * what moves), and callers never cache the edge frame. At a 10⁹-edge
+    * corpus this removes O(rounds) full edge shuffles and one
+    * corpus-sized cache residency (r18, VERDICT r17 #5).
+    *
+    * The partition COUNT is explicit (the session's shuffle-partition
+    * knob — cluster-configured, cpus locally) and the barrier goes
+    * through Sessions.checkpointPartitioned: a plain checkpoint under AQE
+    * captures UnknownPartitioning off the adaptive root, so the standing
+    * layout was silently lost and every round re-exchanged the edges
+    * anyway (caught in plans/r18/cc_round_*). PlanSpec's layout canary
+    * pins `hashpartitioning(b)` on the result. */
+  private[graft] def symmetricEdges(edges: DataFrame,
+      reliable: Boolean = false): DataFrame =
+    Sessions.checkpointPartitioned(edges
+      .select(explode(array(
+        struct(col("a"), col("b")),
+        struct(col("b").as("a"), col("a").as("b")))).as("e"))
+      .select(col("e.a").as("a"), col("e.b").as("b"))
+      .repartition(edges.sparkSession.sessionState.conf.numShufflePartitions,
+        col("b")), reliable)
+
   /** Connected components of an undirected edge list `(a, b)`: returns
     * `(v, lbl)` with lbl = min vertex id of v's component.
     *
@@ -663,30 +698,7 @@ object Dedup {
     // dropped by the ContextCleaner once unreferenced.
     def barrier(df: DataFrame): DataFrame =
       if (reliable) df.checkpoint(true) else df.localCheckpoint(true)
-    // r18 (VERDICT r17 #5 — per-round shuffle hygiene): the symmetric edge
-    // frame is built in ONE scan (explode of both directions — the old
-    // unionByName form read the edge lineage TWICE, which is why every
-    // call site had to persist() it first), hash-partitioned on the
-    // propagation join key `b`, and barrier'd ONCE. Every round's
-    // neighbor join then reuses the standing |E|-partitioning instead of
-    // re-exchanging the edge frame per round (the label side — |V|-sized,
-    // the small side — is what moves); callers no longer cache the edge
-    // frame at all. At a 10⁹-edge corpus this removes O(rounds) full edge
-    // shuffles and one corpus-sized cache residency.
-    // The partition COUNT is explicit (the session's shuffle-partition
-    // knob — cluster-configured, cpus locally) and the barrier goes
-    // through Sessions.checkpointPartitioned: a plain checkpoint under
-    // AQE captures UnknownPartitioning off the adaptive root, so the
-    // standing layout was silently lost and every round re-exchanged sym
-    // anyway (caught in plans/r18/cc_round_*; the fixed dumps show the
-    // sym-side Exchange gone from the round join).
-    val sym = Sessions.checkpointPartitioned(edges
-      .select(explode(array(
-        struct(col("a"), col("b")),
-        struct(col("b").as("a"), col("a").as("b")))).as("e"))
-      .select(col("e.a").as("a"), col("e.b").as("b"))
-      .repartition(edges.sparkSession.sessionState.conf.numShufflePartitions,
-        col("b")), reliable)
+    val sym = symmetricEdges(edges, reliable)
     // Round-0 propagation folded into init: lbl = min(v, min neighbor),
     // computed by the same single shuffle the old `distinct()` init cost —
     // every graph converges one full barrier round earlier (the invariant
@@ -1570,9 +1582,11 @@ object Dedup {
         // docs with the same vocabulary but scrambled sentences score as
         // duplicates. Edit similarity is the order-AWARE verifier — the
         // standard second opinion when near-dup removal must not collapse
-        // legitimate remixes. Shape: Levenshtein is O(len²) PER PAIR, so it
-        // can never run corpus-wide; candidates come from the same
-        // df-capped inverted index as q22 (one shuffle, bounded fan-out),
+        // legitimate remixes. Shape: Levenshtein costs O(⌈len/64⌉·len) per
+        // pair even bit-parallel (graft_levenshtein: Myers/Hyyrö, exact
+        // and equal to Spark's levenshtein), so it can never run
+        // corpus-wide; candidates come from the same df-capped inverted
+        // index as q22 (one shuffle, bounded fan-out),
         // TWICE gated before any text is compared: (1) inter ≥ EditMinInter
         // shared shingles — the intersection count the index already
         // aggregated, free to test, 110× fewer pairs (see EditMinInter);
@@ -1580,6 +1594,7 @@ object Dedup {
         // EditTau (lev ≥ |la-lb| ⇒ sim ≤ min/max). Similarity =
         // (max_len - lev) / max_len: one integer subtraction + one
         // division, hash-exact in both engines.
+        graft.functions.GraftFunctions.register(s)
         val docs = Tables.load(s, dir, "documents")
         val t = docs.select(col("doc_id"), col("text"),
           length(col("text")).cast("long").as("len"))
@@ -1591,14 +1606,17 @@ object Dedup {
             col("len").as("lb")), Seq("b"))
           .filter(least(col("la"), col("lb")) / greatest(col("la"), col("lb"))
             >= EditTau)
-          // The gated frame is rows-tiny but compute-heavy (O(len²)/row):
-          // AQE coalesces it to ~10 skewed partitions, serializing the
-          // levenshtein pass (measured 2.65 → 0.70 s after spreading).
+          // The gated frame is rows-tiny but compute-heavy per row: AQE
+          // coalesces it to ~10 skewed partitions, serializing the
+          // levenshtein pass (measured 2.65 → 0.70 s after spreading, with
+          // the DP kernel). The bit-parallel kernel took this job from
+          // ~1.9 s to ~0.1 s at local[4] (PERF.md "Native pair kernels").
           .repartition(s.sparkContext.defaultParallelism)
-          .withColumn("lev", levenshtein(col("ta"), col("tb")).cast("long"))
+          .withColumn("lev",
+            call_function("graft_levenshtein", col("ta"), col("tb")).cast("long"))
           .select("a", "b", "la", "lb", "lev")
           // Barrier: the edit_sim filter below would otherwise be pushed
-          // under this projection and re-run the O(len²) levenshtein in
+          // under this projection and re-run the levenshtein kernel in
           // the Filter AND the Project (CSE does not span operators).
           // The gated frame is tiny (~2 rows/doc), so materializing it
           // costs nothing next to a second levenshtein pass.

@@ -219,4 +219,70 @@ object EngineProperties extends Properties("graft") {
       r.isNullAt(0) && !r.isNullAt(1) &&
         r.getSeq[Any](1).size == 4 && r.getSeq[Any](1).forall(_ == null)
     }
+
+  // graft_levenshtein (bit-parallel Myers/Hyyrö) must return exactly
+  // Spark's DP levenshtein: characters drawn from ASCII, BMP non-ASCII and
+  // supplementary (4-byte UTF-8) alphabets, lengths on both sides of the
+  // 64- and 128-character block edges, empty strings and NULLs. Half the
+  // right-hand strings are light edits of the left so distances span the
+  // near-dup range, not only the ~length-sized distances of random text.
+  private val editAlphabets = Seq("ab c", "abcdefghij ", "aé日本ü",
+    "a\uD83D\uDE00b\uD834\uDD1E", "x")
+  private def editString(alpha: String): Gen[String] = {
+    val cps = alpha.codePoints().toArray
+    Gen.frequency(
+      1 -> Gen.oneOf(0, 1, 63, 64, 65, 127, 128, 129),
+      2 -> Gen.chooseNum(0, 200)).flatMap(len =>
+      Gen.listOfN(len, Gen.oneOf(cps.toSeq)).map(cs =>
+        new String(cs.toArray, 0, cs.size)))
+  }
+  private val editPair: Gen[(Option[String], Option[String])] = for {
+    alpha <- Gen.oneOf(editAlphabets)
+    a <- editString(alpha)
+    b <- Gen.oneOf(editString(alpha),
+      editString(alpha).map(ins => a.take(a.length / 2) + ins.take(3) + a.drop(a.length / 2 + 2)))
+    nulls <- Gen.frequency(8 -> 0, 1 -> 1, 1 -> 2)
+  } yield (if (nulls == 1) None else Some(a), if (nulls == 2) None else Some(b))
+
+  // Strings cast from binary may hold bytes that are not UTF-8: lone
+  // continuation bytes and invalid lead bytes count as one character each
+  // in Spark's levenshtein. (A truncated last character is left out: the
+  // DP reads past the string's end there.)
+  private val rawPiece = Gen.oneOf(Seq(Array(0x61), Array(0x80), Array(0xbf),
+    Array(0xff), Array(0xc3, 0xa9), Array(0xf0, 0x9f, 0x98, 0x80)))
+  private val rawString = Gen.chooseNum(0, 140).flatMap(n =>
+    Gen.listOfN(n, rawPiece).map(_.flatten.map(_.toByte).toArray))
+
+  property("graft_levenshtein equals levenshtein (ASCII/BMP/supplementary, block edges, nulls)") =
+    Prop.forAll(Gen.listOfN(16, editPair), Gen.listOfN(4, Gen.zip(rawString, rawString))) {
+      (pairs, raw) =>
+        import spark.implicits._
+        graft.functions.GraftFunctions.register(spark)
+        val text = pairs.toDF("a", "b")
+        val bytes = raw.toDF("x", "y").selectExpr("cast(x AS string) AS a", "cast(y AS string) AS b")
+        text.union(bytes)
+          .select(expr("graft_levenshtein(a, b)"), expr("levenshtein(a, b)"))
+          .collect().forall(r => r.get(0) == r.get(1))
+    }
+
+  // graft_bucket_pairs must equal the interpreted pair fan-out it replaced
+  // in Dedup.bucketPairs, including a NULL array and NULL elements.
+  property("graft_bucket_pairs equals the flatten(transform(slice)) pair lambda") =
+    Prop.forAll(Gen.listOfN(6, Gen.option(Gen.oneOf(0, 1, 2, 50).flatMap(n =>
+        Gen.listOfN(n, Gen.frequency(9 -> Gen.chooseNum(0L, 999L).map(Some(_)),
+          1 -> Gen.const(None))))))) { arrays =>
+      import org.apache.spark.sql.Row
+      import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
+      graft.functions.GraftFunctions.register(spark)
+      val rows: Seq[Row] = arrays.map(a =>
+        Row(a.map(xs => xs.map(_.map(x => Long.box(x)).orNull)).orNull))
+      val df = spark.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(Seq(
+        StructField("ds", ArrayType(LongType, containsNull = true)))))
+      val got = df.select(
+        expr("graft_bucket_pairs(ds)"),
+        expr("flatten(transform(ds, (x, i) -> transform(slice(ds, i + 2, size(ds)), " +
+          "y -> struct(x AS a, y AS b))))"))
+      got.schema(0).dataType == got.schema(1).dataType &&
+        got.collect().forall(r => r.get(0) == r.get(1))
+    }
 }

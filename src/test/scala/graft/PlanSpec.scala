@@ -1415,4 +1415,41 @@ class PlanSpec extends AnyFunSuite {
         s"unexpected shuffle key: $keys")
     }
   }
+
+  test("layout canary: the CC edge and authority barriers stay hashpartitioned under AQE, broadcast on or off") {
+    // Sessions.checkpointPartitioned exists because a plain checkpoint
+    // under AQE reports UnknownPartitioning and every loop round then
+    // re-exchanges its edge frame (r18 shipped both barriers inert once,
+    // and nothing failed). Checked with AQE ON — the case that loses the
+    // layout — at the default broadcast threshold and with broadcasts off
+    // (the authority barrier's join plans differently under each).
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.functions.sum
+    import spark.implicits._
+    val edges = Seq((1L, 2L), (2L, 3L), (4L, 5L), (6L, 4L)).toDF("a", "b")
+    val wEdges = Seq(("s1", "s2", 3L), ("s2", "s3", 1L), ("s1", "s3", 2L),
+      ("s3", "s1", 5L)).toDF("src", "dst", "w")
+    val n = spark.sessionState.conf.numShufflePartitions
+    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
+    val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try {
+      spark.conf.set("spark.sql.adaptive.enabled", "true")
+      for (bc <- Seq(prevBc, "-1")) {
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bc)
+        val barriers = Seq(
+          ("CC edge", operators.Dedup.symmetricEdges(edges), "b"),
+          ("authority", operators.Audit.shareEdges(wEdges,
+            wEdges.groupBy("src").agg(sum("w").as("ow"))), "src"))
+        for ((name, df, key) <- barriers) df.queryExecution.sparkPlan.outputPartitioning match {
+          case HashPartitioning(Seq(a: Attribute), `n`) if a.name == key =>
+          case other => fail(s"$name barrier (autoBroadcastJoinThreshold=$bc) " +
+            s"reports $other, not hashpartitioning($key, $n)")
+        }
+      }
+    } finally {
+      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
+    }
+  }
 }

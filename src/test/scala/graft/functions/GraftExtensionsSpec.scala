@@ -51,4 +51,49 @@ class GraftExtensionsSpec extends AnyFunSuite {
       prevActive.foreach(SparkSession.setActiveSession)
     }
   }
+
+  test("GraftExtensions and GraftFunctions.register install the same graft_* names") {
+    // The two registration paths once kept separate lists and drifted
+    // (graft_topk was missing from the extensions). Compare what each
+    // path actually puts in a fresh session's function registry.
+    graft.SharedSpark.spark // the shared context exists before any fresh session
+    def graftNames(spark: SparkSession): Set[String] =
+      spark.sessionState.functionRegistry.listFunction()
+        .map(_.funcName).filter(_.startsWith("graft_")).toSet
+    val prevDefault = SparkSession.getDefaultSession
+    val prevActive = SparkSession.getActiveSession
+    def fresh(b: SparkSession.Builder => SparkSession.Builder): SparkSession = {
+      SparkSession.clearDefaultSession()
+      SparkSession.clearActiveSession()
+      b(SparkSession.builder().master("local[1]").config("spark.ui.enabled", "false"))
+        .getOrCreate()
+    }
+    try {
+      val injected = graftNames(fresh(_.withExtensions(new GraftExtensions)))
+      val plain = fresh(identity)
+      assert(graftNames(plain).isEmpty, "a session without either path has graft_* functions")
+      GraftFunctions.register(plain)
+      val registered = graftNames(plain)
+      assert(injected === registered)
+      assert(Set("graft_topk", "graft_levenshtein", "graft_bucket_pairs").subsetOf(injected))
+    } finally {
+      prevDefault.foreach(SparkSession.setDefaultSession)
+      prevActive.foreach(SparkSession.setActiveSession)
+    }
+  }
+
+  test("wrong arity of the pair kernels is a clean error naming the signature") {
+    val spark = graft.SharedSpark.spark
+    GraftFunctions.register(spark)
+    for ((call, sig) <- Seq(
+        "graft_levenshtein('a')" -> "graft_levenshtein expects 2 arguments (a, b), got 1",
+        "graft_levenshtein('a', 'b', 'c')" -> "graft_levenshtein expects 2 arguments (a, b), got 3",
+        "graft_bucket_pairs()" -> "graft_bucket_pairs expects 1 argument (ds), got 0",
+        "graft_bucket_pairs(array(1L), array(2L))" -> "graft_bucket_pairs expects 1 argument (ds), got 2")) {
+      val e = intercept[Exception](spark.sql(s"SELECT $call").collect())
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).toList
+      assert(msgs.exists(_.contains(sig)), s"$call: ${msgs.mkString(" | ")}")
+    }
+  }
 }

@@ -37,7 +37,8 @@ class JobCountSpec extends AnyFunSuite {
   // localCheckpoints its scored pairs so the symmetric mirror's two
   // branches don't each re-run the candidates+verify subtree, q91
   // localCheckpoints its levenshtein frame so the edit_sim filter isn't
-  // pushed into a second O(len²) evaluation, q102 consolidates over
+  // pushed into a second graft_levenshtein evaluation (bit-parallel,
+  // O(⌈len/64⌉·len) per pair), q102 consolidates over
   // the same eager pointer-jumping component map as q47/q58, and q105
   // builds its registry ARTIFACT (distinct-shingle localCheckpoint + the
   // bloom sketch collected to a literal) at construction — the in-query
