@@ -89,12 +89,10 @@ object Bench {
     // least-contended run. Passes are interleaved (full catalog per pass,
     // catalog order) and every pass builds a FRESH DataFrame, so no
     // QueryExecution/shuffle output is ever reused across samples.
-    // Optional args: `--isolate` adds a fresh-session isolated pass (see
-    // below); `--fresh` instead forks one fresh JVM per cohort (see
+    // Optional args: `--fresh` forks one fresh JVM per cohort (see
     // runFresh); remaining args = query-name filter (local iteration on a
     // subset). Default benches the full catalog, exactly as the driver
     // invokes it.
-    val doIsolate = args.contains("--isolate")
     val filterArgs = args.filterNot(_.startsWith("--"))
     val names0 = SparkEntry.queries.keys.toSeq.sorted
     val names = if (filterArgs.isEmpty) names0 else names0.filter(filterArgs.toSet)
@@ -118,36 +116,6 @@ object Bench {
       // Any failed pass marks the query failed — a flaky crash must surface.
       (name, if (vs.exists(_ < 0)) -1.0 else vs.min, !vs.exists(_ < 0))
     }
-    // ── --isolate: the decoupling pass (VERDICT r9 #7) ──
-    // The coupled catalog run carries ±0.5-1.5 s of cross-query state (temp
-    // catalog entries, tracked cached tables, whoever warmed which codegen
-    // class) that costs adjudication effort every round. The isolated pass
-    // runs each query once in a FRESH SparkSession (newSession(): own
-    // SessionState — catalog, temp views, session conf seeded from the
-    // shared SparkConf, so nanosAsLong/UTC/partitions carry over) with the
-    // shared cache cleared first. Same JVM and SparkContext by design: JIT
-    // and block-manager warmth are per-process and identical for every
-    // query, so the pass isolates exactly the session-level coupling
-    // without paying a 130×-JVM-restart artifact that would measure
-    // startup, not queries. Emitted ALONGSIDE the coupled numbers in one
-    // artifact; absent unless the flag is passed (the driver's invocation
-    // is unchanged).
-    val isolated: Option[Seq[(String, Double, Boolean)]] =
-      if (!doIsolate) None
-      else Some(names.map { name =>
-        val s2 = spark.newSession()
-        s2.catalog.clearCache()
-        val fn = SparkEntry.queries(name)
-        val t0 = System.nanoTime()
-        val ok =
-          try { fn(s2, sfDir).queryExecution.toRdd.count(); true }
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] isolated $name FAILED: ${e.getMessage}"); false
-          }
-        val sec = (System.nanoTime() - t0) / 1e9
-        (name, if (ok) sec else -1.0, ok)
-      })
-
     val qs = results.map { case (k, v, _) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val errs = results.collect { case (k, _, false) => "\"" + k + "\"" }
@@ -158,16 +126,8 @@ object Bench {
     // failed flag + nonzero rc make a broken run unambiguous to automation.
     val total =
       if (nErr > 0) -1.0 else results.collect { case (_, v, true) => v }.sum
-    val isoJson = isolated.map { iso =>
-      val nIsoErr = iso.count(!_._3)
-      val isoTotal =
-        if (nIsoErr > 0) -1.0 else iso.collect { case (_, v, true) => v }.sum
-      val isoQs = iso.map { case (k, v, _) => "\"" + k + "\":" + v }
-        .mkString("{", ",", "}")
-      s""","isolated":{"total":$isoTotal,"agg":"single_pass_fresh_session","failed":${nIsoErr > 0},"cohorts":${cohortsOf(iso)},"queries":$isoQs}"""
-    }.getOrElse("")
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","agg":"min_of_$passes","failed":${nErr > 0},"cohorts":${cohortsOf(results)},"queries":$qs,"errors":$errs,"machine":${machineJson(cpus)},"sf":"$sfDir"$isoJson}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","agg":"min_of_$passes","failed":${nErr > 0},"cohorts":${cohortsOf(results)},"queries":$qs,"errors":$errs,"machine":${machineJson(cpus)},"sf":"$sfDir"}"""
     val compact =
       s"""{"metric":"total","value":$total,"unit":"sec","agg":"min_of_$passes","failed":${nErr > 0},"n_queries":${results.size},"cohorts":${cohortsOf(results)},"errors":$errs,"machine":${machineJson(cpus)},"sf":"$sfDir","queries_in":"${sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/BENCH_LAST.json")}"}"""
     writeArtifact(json, compact)

@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Single place where harness sessions are built, so session-wide config
-  * (timezone, shuffle partitions, the events-table nanos conf) is set once at
-  * construction instead of mutated mid-flight by loaders.
+  * (timezone, shuffle partitions, the events-table nanos conf) and the
+  * engine's SQL functions (`GraftExtensions`) are set once at construction
+  * instead of mutated mid-flight by loaders and operators.
   */
 object Sessions {
 
@@ -12,7 +13,9 @@ object Sessions {
     *   - UTC so date math is engine-portable;
     *   - `nanosAsLong`: `events.ts` is parquet TIMESTAMP(NANOS), which the
     *     vectorized reader otherwise rejects ([PARQUET_TYPE_ILLEGAL]); reading
-    *     it as a raw bigint keeps exact nanos (see Tables.events).
+    *     it as a raw bigint keeps exact nanos (see Tables.events);
+    *   - `GraftExtensions`: every `graft_*` function, inherited by
+    *     `newSession()` and streaming clones.
     */
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
     SparkSession.builder()
@@ -21,6 +24,7 @@ object Sessions {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .withExtensions(new graft.functions.GraftExtensions)
 
   def local(cpus: Int): SparkSession = builder(s"local[$cpus]", cpus).getOrCreate()
 

@@ -516,7 +516,6 @@ object Stress {
       //     cell agreement / band collisions drop ~16×/65536× — fan-in
       //     must collapse to the true-near-dup floor.
       // Cell Hamming for depth 2 compares 2-char groups as ONE cell.
-      graft.functions.GraftFunctions.register(spark)
       def variant(mode: String, bins: Int, depth: Int, bands: Int, tau: Int): Unit = {
         val cellW = (bins / bands) * depth
         val vGrid = docs

@@ -1,29 +1,25 @@
 package graft.functions
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo, Literal, XxHash64}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.types.IntegerType
 
-/** Library-grade registration: add
-  * `spark.sql.extensions=graft.functions.GraftExtensions` to the session
-  * conf and every engine function is available in SQL and `call_function`
-  * without imperative per-session setup — the idiomatic way a Spark library
-  * ships Catalyst extensions. (GraftFunctions.register stays for sessions
-  * built without the conf.) Both paths install the same
-  * `GraftFunctions.table`.
+/** The engine's functions as a Spark session extension: every entry in
+  * `GraftFunctions.table` is injected into the function registry when the
+  * session is built, so SQL and `call_function` see them with no
+  * per-operator setup. `graft.Sessions.builder` installs it on every engine
+  * session; `newSession()` and streaming clones share the parent's
+  * extensions, so they resolve the same names. A session built outside
+  * `Sessions` can add `spark.sql.extensions=graft.functions.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
+  override def apply(ext: SparkSessionExtensions): Unit =
     GraftFunctions.table.foreach { case (name, cls, build) =>
       ext.injectFunction((FunctionIdentifier(name),
         new ExpressionInfo(cls.getName, name), build))
     }
-    // Declarative aggregate(zip_with(...)) dot folds → codegen'd DotProduct
-    // (bit-identical; see DotFoldRewrite).
-    ext.injectOptimizerRule(_ => DotFoldRewrite)
-  }
 }
 
 object GraftFunctions {
@@ -59,8 +55,8 @@ object GraftFunctions {
           other.drop(1).map(_.sql).mkString(", "))
   }
 
-  /** The one (name, expression class, builder) table behind both
-    * registration paths (`GraftExtensions` and `register`). */
+  /** The one (name, expression class, builder) table `GraftExtensions`
+    * installs. */
   val table: Seq[(String, Class[_], Builder)] = Seq(
     fn("graft_dot", classOf[DotProduct], "a", "b")(c => DotProduct(c(0), c(1))),
     fn("graft_simhash60", classOf[SimHash60], "words")(c => SimHash60(c(0))),
@@ -92,12 +88,4 @@ object GraftFunctions {
       c => new BloomFilterAggregate(new XxHash64(Seq(c(0))), c(1))),
     fn("graft_might_contain", classOf[BloomFilterMightContain], "bloom", "value")(
       c => BloomFilterMightContain(c(0), new XxHash64(Seq(c(1))))))
-
-  /** Idempotent per-session registration; call from any entry point, then
-    * invoke via `call_function("graft_dot", ...)` etc. */
-  def register(spark: SparkSession): Unit =
-    table.foreach { case (name, cls, build) =>
-      spark.sessionState.functionRegistry.registerFunction(
-        FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build)
-    }
 }

@@ -48,8 +48,9 @@ object Hash60 {
     ThreadLocal.withInitial(() => MessageDigest.getInstance("MD5"))
 
   /** Fold an md5 digest's first 60 bits — identical to
-    * `conv(substr(md5(x), 1, 15), 16, 10)` (see MinHash12.hash60, the
-    * same fold over a shingle). */
+    * `conv(substr(md5(x), 1, 15), 16, 10)`. The one copy of the fold:
+    * every md5 kernel in this package (MinHash12, PhashSig, WinnowFps,
+    * Hrw, the gram/CMS kernels below) folds through it. */
   private[functions] def fold60(d: Array[Byte]): Long = {
     var h = 0L
     var k = 0
@@ -60,6 +61,9 @@ object Hash60 {
   def compute(s: UTF8String): Long =
     fold60(digests.get().digest(s.getBytes))
 
+  /** This thread's md5 instance, shared by every kernel in the package.
+    * Each use must leave it reset: one complete `digest(bytes)`, or an
+    * `update…digest()` run with no other kernel call in between. */
   private[functions] def digest(): MessageDigest = digests.get()
 }
 

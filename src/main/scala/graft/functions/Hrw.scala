@@ -1,7 +1,6 @@
 package graft.functions
 
 import java.nio.charset.StandardCharsets
-import java.security.MessageDigest
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -45,8 +44,8 @@ case class Hrw(child: Expression, n: Int) extends UnaryExpression {
 
 object Hrw {
 
-  /** Shared SQL-registration builder (both the session-extensions and
-    * the registry injection sites use this one). The shard count must
+  /** SQL function builder (the `graft_hrw` entry of
+    * `GraftFunctions.table`). The shard count must
     * fold to a driver-side Int at registration — it sizes the per-row
     * candidate loop — and SQL integer literals parse as INT or BIGINT
     * depending on magnitude/dialect, so both are accepted (ADVICE r15:
@@ -66,32 +65,14 @@ object Hrw {
         s"got ${other.size}")
   }
 
-  private val digests: ThreadLocal[MessageDigest] =
-    ThreadLocal.withInitial(() => MessageDigest.getInstance("MD5"))
-
-  /** 60-bit fold = the digest's first 15 hex digits (nibbles) as one
-    * non-negative long — identical to
-    * `conv(substr(md5(m), 1, 15), 16, 10)`. */
-  private def h60(md: MessageDigest, msg: String): Long = {
-    md.reset()
-    val h = md.digest(msg.getBytes(StandardCharsets.UTF_8))
-    var out = 0L
-    var k = 0
-    while (k < 15) {
-      val nib = if (k % 2 == 0) (h(k / 2) >> 4) & 0xf else h(k / 2) & 0xf
-      out = (out << 4) | nib
-      k += 1
-    }
-    out
-  }
-
   def compute(docId: Long, n: Int): Long = {
-    val md = digests.get()
+    val md = Hash60.digest()
     var best = -1L
     var bestS = 0L
     var s = 0
     while (s < n) {
-      val h = h60(md, "hrw" + s + ":" + docId)
+      val h = Hash60.fold60(
+        md.digest(("hrw" + s + ":" + docId).getBytes(StandardCharsets.UTF_8)))
       if (h >= best) { best = h; bestS = s.toLong } // tie → larger s
       s += 1
     }

@@ -1,7 +1,5 @@
 package graft.functions
 
-import java.security.MessageDigest
-
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -60,28 +58,15 @@ object MinHash12 {
   /** 2^61 - 1, the Mersenne prime of the hash family. */
   val M61: Long = (1L << 61) - 1
 
-  private val digests: ThreadLocal[MessageDigest] =
-    ThreadLocal.withInitial(() => MessageDigest.getInstance("MD5"))
-
-  /** 60-bit int from the first 15 hex digits of an md5 digest — identical
-    * to `conv(substr(md5(x), 1, 15), 16, 10)` / the oracle's nibble fold. */
-  private def hash60(md: MessageDigest, bytes: Array[Byte]): Long = {
-    val d = md.digest(bytes)
-    var h = 0L
-    var k = 0
-    while (k < 7) { h = (h << 8) | (d(k) & 0xffL); k += 1 }
-    (h << 4) | ((d(7) >> 4) & 0xfL)
-  }
-
   /** Fixed per-slot multipliers/offsets: 60-bit values from md5("mh-a|i") /
     * md5("mh-b|i"), A forced odd (never 0). Interpolated as decimal
     * literals into the q23 oracle SQL, so both engines share them by
     * construction, not by accident. */
   val MulAdd: IndexedSeq[(Long, Long)] = {
-    val md = MessageDigest.getInstance("MD5")
+    val md = Hash60.digest()
     IndexedSeq.tabulate(NumHashes) { i =>
-      (hash60(md, s"mh-a|$i".getBytes("UTF-8")) | 1L,
-        hash60(md, s"mh-b|$i".getBytes("UTF-8")))
+      (Hash60.fold60(md.digest(s"mh-a|$i".getBytes("UTF-8"))) | 1L,
+        Hash60.fold60(md.digest(s"mh-b|$i".getBytes("UTF-8"))))
     }
   }
   private val MulA: Array[Long] = MulAdd.map(_._1).toArray
@@ -100,7 +85,7 @@ object MinHash12 {
 
   def compute(words: ArrayData): ArrayData = {
     val n = words.numElements()
-    val md = digests.get()
+    val md = Hash60.digest()
     val mins = new Array[Long](NumHashes)
     java.util.Arrays.fill(mins, Long.MaxValue)
     var any = false
@@ -119,7 +104,7 @@ object MinHash12 {
         }
         t += 1
       }
-      val h = hash60(md, sb.toString.getBytes("UTF-8"))
+      val h = Hash60.fold60(md.digest(sb.toString.getBytes("UTF-8")))
       any = true
       var k = 0
       while (k < NumHashes) {

@@ -1,7 +1,5 @@
 package graft.functions
 
-import java.security.MessageDigest
-
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -70,19 +68,6 @@ object PhashSig {
 
   private val hexd = "0123456789abcdef"
 
-  private val digests: ThreadLocal[MessageDigest] =
-    ThreadLocal.withInitial(() => MessageDigest.getInstance("MD5"))
-
-  /** 60-bit int from the first 15 hex digits of an md5 digest (the
-    * MinHash12.hash60 / WinnowFps derivation — kept locally identical). */
-  private def hash60(md: MessageDigest, bytes: Array[Byte]): Long = {
-    val d = md.digest(bytes)
-    var h = 0L
-    var k = 0
-    while (k < 7) { h = (h << 8) | (d(k) & 0xffL); k += 1 }
-    (h << 4) | ((d(7) >> 4) & 0xfL)
-  }
-
   def compute(words: ArrayData, bins: Int, depth: Int = 1): UTF8String = {
     val n = words.numElements()
     if (n < ShingleN) return null
@@ -99,7 +84,7 @@ object PhashSig {
     * (Multimodal.phashSignatureJvm). Null words are skipped inside a gram
     * like concat_ws does. */
   def computeWords(words: Array[String], bins: Int = Bins, depth: Int = 1): String = {
-    val md = digests.get()
+    val md = Hash60.digest()
     val mins = Array.fill(bins)(Long.MaxValue)
     val nGrams = words.length - ShingleN + 1
     var i = 0
@@ -115,7 +100,7 @@ object PhashSig {
         }
         t += 1
       }
-      val h = hash60(md, sb.toString.getBytes("UTF-8"))
+      val h = Hash60.fold60(md.digest(sb.toString.getBytes("UTF-8")))
       val b = (h % bins).toInt
       if (h < mins(b)) mins(b) = h
       i += 1

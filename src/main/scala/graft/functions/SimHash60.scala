@@ -1,7 +1,5 @@
 package graft.functions
 
-import java.security.MessageDigest
-
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -43,13 +41,10 @@ case class SimHash60(child: Expression) extends UnaryExpression {
 object SimHash60 {
   val Bits = 60
 
-  private val digests: ThreadLocal[MessageDigest] =
-    ThreadLocal.withInitial(() => MessageDigest.getInstance("MD5"))
-
   def compute(words: ArrayData): Long = {
     val n = words.numElements()
     val bs = new Array[Int](Bits)
-    val md = digests.get()
+    val md = Hash60.digest()
     var i = 0
     while (i < n) {
       if (words.isNullAt(i)) {

@@ -39,19 +39,15 @@ final class TopKState(val k: Int) {
 }
 
 /** `graft_topk(score, id, k)`: per-group top-k as a native Catalyst
-  * TypedImperativeAggregate — the declarative replacement for the
-  * `groupByKey.mapValues.agg(TopKAggregator)` typed path (VERDICT r17 #7).
+  * TypedImperativeAggregate — the engine's one top-k.
   *
-  * Identical semantics to graft.functions.TopKAggregator: keep the k best
-  * rows under the TOTAL order (score DESC, id ASC), output them in that
-  * order as array<struct<doc_id, score>> (rank = array position + 1). The
-  * typed path deserialized every input row to a Scala object
-  * (DeserializeToObject/SerializeFromObject around the aggregation, row-
-  * at-a-time encoder work, a k-element Seq re-sorted per row); this
-  * operates on UnsafeRows inside ObjectHashAggregate with partial (map-
-  * side) aggregation and an O(k) primitive-array buffer — same bounded
-  * state, no object boundary. TopKSpec pins result equivalence against
-  * the typed aggregator; the q110/q55 oracles pin the window formulation.
+  * Keeps the k best rows under the TOTAL order (score DESC, id ASC) and
+  * outputs them in that order as array<struct<doc_id, score>> (rank =
+  * array position + 1). It operates on UnsafeRows inside
+  * ObjectHashAggregate with partial (map-side) aggregation and an O(k)
+  * primitive-array buffer: bounded state, no object boundary, and no
+  * per-group sort as the window formulation would need. TopKRowsSpec and
+  * the q55/q110 oracles pin equivalence with that window formulation.
   *
   * Null score/id rows are skipped (no call site can produce them — scores
   * are arithmetic over non-null aggregates).

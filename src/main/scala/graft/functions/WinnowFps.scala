@@ -1,7 +1,5 @@
 package graft.functions
 
-import java.security.MessageDigest
-
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -17,7 +15,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   *
   * Gram hash = first 15 md5 hex digits as a 60-bit bigint — identical to
   * `conv(substr(md5(s), 1, 15), 16, 10)` and the oracle's hex-nibble fold
-  * (MinHash12.hash60, shared), so fingerprints are engine-portable.
+  * (Hash60.fold60, shared), so fingerprints are engine-portable.
   *
   * This replaced the declarative
   * `array_distinct(transform(sequence(...), i -> array_min(slice(hs, ...))))`
@@ -53,24 +51,11 @@ object WinnowFps {
   val ShingleN = 3
   val WinnowW = 4
 
-  private val digests: ThreadLocal[MessageDigest] =
-    ThreadLocal.withInitial(() => MessageDigest.getInstance("MD5"))
-
-  /** 60-bit int from the first 15 hex digits of an md5 digest (the
-    * MinHash12.hash60 derivation — kept locally identical). */
-  private def hash60(md: MessageDigest, bytes: Array[Byte]): Long = {
-    val d = md.digest(bytes)
-    var h = 0L
-    var k = 0
-    while (k < 7) { h = (h << 8) | (d(k) & 0xffL); k += 1 }
-    (h << 4) | ((d(7) >> 4) & 0xfL)
-  }
-
   def compute(words: ArrayData): ArrayData = {
     val n = words.numElements()
     val nGrams = n - ShingleN + 1
     if (nGrams < WinnowW) return new GenericArrayData(Array.empty[Any])
-    val md = digests.get()
+    val md = Hash60.digest()
     // One md5 per gram (concat_ws ' ' with nulls skipped, like the
     // shingle pipeline).
     val hs = new Array[Long](nGrams)
@@ -87,7 +72,7 @@ object WinnowFps {
         }
         t += 1
       }
-      hs(i) = hash60(md, sb.toString.getBytes("UTF-8"))
+      hs(i) = Hash60.fold60(md.digest(sb.toString.getBytes("UTF-8")))
       i += 1
     }
     // O(n) sliding-window minima: monotonic deque of candidate indices.

@@ -271,7 +271,6 @@ object Audit {
     * (geometric(½) each → discrete Laplace at ε = ln 2), sub-KAnonK
     * cells suppressed to −1, released floored at 0. */
   def dpRelease(docs: DataFrame, salt: String): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     require(!salt.contains("'"),
       "salt must not contain a single quote (it interpolates into SQL)")
     val cells = docs
@@ -307,8 +306,7 @@ object Audit {
     * codegen'd graft_hash60 (bit-identical to
     * `cast(conv(substr(md5($c), 1, 15), 16, 10) AS bigint)`, minus the hex
     * round trip — r17); the DuckDB twin is the nibble fold below
-    * (bit-identical, the q79 idiom). Callers must have GraftFunctions
-    * registered on the session. */
+    * (bit-identical, the q79 idiom). */
   private def h60Spark(c: String): String =
     s"graft_hash60($c)"
   private def h60Duck(c: String): String =
@@ -347,7 +345,7 @@ object Audit {
     * `transform(sequence(0, D-1), j -> conv-fold(md5('cms'||j||':'||v)) % W)`
     * lambda, minus the hex round trip and the interpreted per-j walk; the
     * DuckDB twin below salts j per unnested row, and both render j with
-    * the same decimal cast. Callers need GraftFunctions registered. */
+    * the same decimal cast. */
   private def cmsBucketsSpark(v: String): String =
     s"graft_cmsbuckets($v, $CmsD, $CmsW)"
 
@@ -408,7 +406,6 @@ object Audit {
     * (stream-safe, the hllRows split): the batch path aggregates it into
     * the grid below; the streaming twin folds it into cell state. */
   def cmsRows(items: DataFrame, v: String): DataFrame = {
-    graft.functions.GraftFunctions.register(items.sparkSession)
     items
       .select(posexplode(expr(cmsBucketsSpark(v))))
       .select(col("pos").cast("long").as("j"), col("col").as("c"))
@@ -425,7 +422,6 @@ object Audit {
 
   /** Per-group CMS cells (grp, j, c, cc) — state ≤ |groups| × D × W. */
   def cmsCellsBy(items: DataFrame, grp: String, v: String): DataFrame = {
-    graft.functions.GraftFunctions.register(items.sparkSession)
     items
       .select(col(grp).as("grp"), posexplode(expr(cmsBucketsSpark(v))))
       .select(col("grp"), col("pos").cast("long").as("j"), col("col").as("c"))
@@ -435,7 +431,6 @@ object Audit {
   /** (key, g) HllN-gram stream keyed by any doc column — the q103
     * gram-enumeration idiom. */
   def gramsBy(docs: DataFrame, key: String): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     // graft_gramstrings = the old per-i transform lambda (slice +
     // interpreted concat_ws per gram) as one codegen'd pass over the word
     // array — identical strings (r17).
@@ -458,7 +453,6 @@ object Audit {
     * sketch+verify trade — a barrier here would materialize the
     * corpus-sized occurrence frame instead). */
   def noveltyOcc(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val widths = NovWidths.mkString(", ")
     // graft_gramhashes replaces the old per-i lambda (slice + concat_ws +
     // md5 hex fold, interpreted per gram — r17); it returns EMPTY below n
@@ -497,13 +491,12 @@ object Audit {
     hllEstimate(hllRegistersFromHash(noveltyOcc(docs), "n", "gh"))
 
   /** (grp, v) → per-occurrence (grp, idx, rho) rows — ρ via the
-    * least-significant-set-bit trick: `z & -z` isolates the lowest set
+    * least-significant-set-bit trick: `z & -z` keeps only the lowest set
     * bit, `length(bin(·))` reads its position (both engines print
     * minimal binary strings). Pure narrow projection (stream-safe): the
     * batch path aggregates it below, the streaming twin folds it into
     * grid-bounded register state instead. */
   def hllRows(items: DataFrame, grp: String, v: String): DataFrame = {
-    graft.functions.GraftFunctions.register(items.sparkSession)
     items
       .withColumn("h", expr(h60Spark(v)))
       .withColumn("idx", expr(s"h % $HllM"))
@@ -1585,11 +1578,6 @@ object Audit {
         // q159's MG candidates). Graded by q176's own oracle — output
         // identical means the persisted cells + totals reproduce the
         // text-derived sketch bit-for-bit.
-        // Explicit registration: the probe leg below parses
-        // expr(cmsBucketsSpark(...)) directly — without this it only
-        // works because saveSketchLegs happens to register first
-        // (ADVICE r17).
-        graft.functions.GraftFunctions.register(s)
         val scratch = graft.Scratch.dir("q179-store")
         val docs = Tables.load(s, dir, "documents")
         // Serves the FREQUENCY legs only (cells + totals) — see q178.

@@ -99,7 +99,6 @@ object Dedup {
       .otherwise(lit("test"))
 
   private def withSplitBucket(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs.withColumn("hb", expr(s"graft_hash60(text) % $SplitBuckets"))
   }
 
@@ -121,7 +120,6 @@ object Dedup {
     * shuffle. Callers that need set semantics either `.distinct()` (one
     * shuffle) or dedupe inside their own aggregation (collect_set). */
   def shinglesRaw(docs: DataFrame, n: Int = ShingleN): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs
       .select(col("doc_id"), split(trim(col("text")), " ").as("w"))
       .filter(size(col("w")) >= n)
@@ -142,7 +140,6 @@ object Dedup {
     * the position join), cover-expansion is a ≤BoilerN× narrow explode of
     * start positions, re-assembly is one doc_id-keyed aggregation. */
   def boilerplateStrip(docs: DataFrame, minDf: Int = BoilerDf): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val n = BoilerN
     val w = docs.select(col("doc_id"), split(trim(col("text")), " ").as("w"))
     val pos = w.select(col("doc_id"),
@@ -200,7 +197,6 @@ object Dedup {
     * gram index (IndexStore.saveGramIndex / q151), and Stress crossdoc. */
   private[graft] def gramRows(docs: DataFrame, n: Int = CrossN,
       keep: Seq[String] = Nil): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val ks = keep.map(col)
     // graft_gramhashes = the old per-i transform lambda (slice + concat_ws
     // + md5 hex fold) as one codegen'd pass: array index = start position,
@@ -361,7 +357,6 @@ object Dedup {
     // (Stress `winnow`, r9). graft_winnow is the codegen'd form: one md5
     // per gram, O(n) monotonic-deque window minima, same fingerprints
     // bit-for-bit (the oracle's nibble fold pins it).
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs
       .select(col("doc_id"), split(trim(col("text")), " ").as("w"))
       .filter(size(col("w")) >= ShingleN + WinnowW - 1)
@@ -441,7 +436,6 @@ object Dedup {
     * MinHash12.scala). Documents with < ShingleN words have no shingles
     * and are dropped, like the shingle pipeline's size filter. */
   def minhashSignatures(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     // The shingle filter is a CHEAP predicate on the word count — filtering
     // on the signature itself (size(sig)) would re-evaluate the full md5
     // loop once in the Filter and once in the Project. The 12 element_at
@@ -547,7 +541,6 @@ object Dedup {
     * size(ds)), y -> struct(x AS a, y AS b))))` lambda it replaced is
     * pinned equal by EngineProperties. */
   private def bucketPairs(buckets: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(buckets.sparkSession)
     buckets.select(explode(call_function("graft_bucket_pairs", col("ds"))).as("p"))
       .groupBy(col("p.a").as("a"), col("p.b").as("b"))
       .agg(count(lit(1)).as("inter"))
@@ -931,7 +924,6 @@ object Dedup {
     * consumer. */
   def buildDecontamRegistry(registry: DataFrame,
       est: Long = 1L << 20): (DataFrame, Array[Byte]) = {
-    graft.functions.GraftFunctions.register(registry.sparkSession)
     val reg = shinglesRaw(registry).select("s").distinct().localCheckpoint(true)
     val bf = reg.agg(call_function("graft_bloom_agg", col("s"), lit(est)).as("bf"))
       .head().getAs[Array[Byte]](0)
@@ -994,7 +986,6 @@ object Dedup {
     * formulation of the same math runs interpreted at ~60 ms/doc — scan
     * speed only comes from the custom expression here. */
   def simhashed(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs.select(col("doc_id"),
       call_function("graft_simhash60", split(trim(col("text")), " ")).as("simhash"))
   }
@@ -1594,7 +1585,6 @@ object Dedup {
         // EditTau (lev ≥ |la-lb| ⇒ sim ≤ min/max). Similarity =
         // (max_len - lev) / max_len: one integer subtraction + one
         // division, hash-exact in both engines.
-        graft.functions.GraftFunctions.register(s)
         val docs = Tables.load(s, dir, "documents")
         val t = docs.select(col("doc_id"), col("text"),
           length(col("text")).cast("long").as("len"))
@@ -1661,7 +1651,6 @@ object Dedup {
         // ONE tiny source-keyed aggregation (output rows = #sources).
         // Counts are integer sums; the only double is the final division.
         val n = BoilerN
-        graft.functions.GraftFunctions.register(s)
         val docs = Tables.load(s, dir, "documents")
         val w = docs.select(col("doc_id"), split(trim(col("text")), " ").as("w"))
         val sh8 = w.filter(size(col("w")) >= n)
@@ -2138,7 +2127,6 @@ object Dedup {
         // Shapes add nothing to q58: the corpus sees ONE doc_id-keyed join
         // against the component map (AQE broadcasts it when small);
         // singletons fall through as their own component via coalesce.
-        graft.functions.GraftFunctions.register(s)
         val docs = Tables.load(s, dir, "documents")
         val comp = connectedComponents(jaccardPairs(docs).select("a", "b"))
         docs.select(col("doc_id"))

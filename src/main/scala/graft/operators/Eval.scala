@@ -60,7 +60,7 @@ object Eval {
   /** Portable 60-bit md5 fold of a SQL string expression — Spark side is
     * the codegen'd graft_hash60 (bit-identical to
     * `cast(conv(substr(md5($msg), 1, 15), 16, 10) AS bigint)`, minus the
-    * hex round trip — r17; callers register GraftFunctions); DuckDB twin
+    * hex round trip — r17); DuckDB twin
     * inlined in the oracles below. */
   private[operators] def h60(msg: String): String =
     s"graft_hash60($msg)"
@@ -314,7 +314,6 @@ object Eval {
         // codegen'd) into a (shard, source) partial+final aggregate —
         // Shards × sources rows (both catalog-sized: named sources, O(1k)
         // shards). The share/parity windows run over THAT frame only.
-        graft.functions.GraftFunctions.register(s)
         val g = Tables.load(s, dir, "documents")
           .withColumn("shard",
             expr(s"graft_hash60(cast(doc_id AS string)) % $Shards"))
@@ -424,7 +423,6 @@ object Eval {
         // a per-row struct-array allocation — the SimHash60/winnow
         // lesson; PlacementSpec pins the two bit-identical); no state,
         // no join, nothing wider than (source) ever shuffles.
-        graft.functions.GraftFunctions.register(s)
         Tables.load(s, dir, "documents")
           .withColumn("s8", call_function("graft_hrw", col("doc_id"), lit(RvOld)))
           .withColumn("s9", call_function("graft_hrw", col("doc_id"), lit(RvNew)))
@@ -480,7 +478,6 @@ object Eval {
         // expectation term is a broadcast 1-row aggregate (per-pair
         // products ≤ n² — overflow-safe below ~3e9 docs/source, the
         // q170-style documented bound).
-        graft.functions.GraftFunctions.register(s)
         val docs = Tables.load(s, dir, "documents")
         val base = docs.select(col("doc_id"), col("source"),
           (expr(h60("concat('sh:', cast(doc_id AS string))")) % Shards)

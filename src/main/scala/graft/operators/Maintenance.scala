@@ -181,7 +181,6 @@ object Maintenance {
         // the same aggregate. The layouts themselves never materialize —
         // this is the decision table you read BEFORE paying a corpus
         // rewrite (`zorderWrite`, composed per-partition at scale).
-        graft.functions.GraftFunctions.register(s)
         val keyed = Tables.load(s, dir, "documents")
           .withColumn("a",
             expr("graft_hash60(concat('zl:', lang))") % (1L << ZqBits))

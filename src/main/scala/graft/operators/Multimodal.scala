@@ -66,7 +66,6 @@ object Multimodal {
     * nibble fold pins the expression's bit-parity through DuckDB at all
     * three SFs, and the streaming twin shares the same compute core. */
   def phashGrid(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs
       .select(col("doc_id"),
         call_function("graft_phashsig", split(trim(col("text")), " ")).as("pixels"))
@@ -547,7 +546,6 @@ object Multimodal {
         // oracle re-derives the deep pixels independently, so the depth
         // parameter (and the div-by-bins entropy fix it depends on) is
         // graded through DuckDB, not just spec-pinned.
-        graft.functions.GraftFunctions.register(s)
         val CellW = 2; val BandW = 4 * CellW; val HamTau = 3
         val grid = Tables.load(s, dir, "documents")
           .select(col("doc_id"), call_function("graft_phashsig",

@@ -205,7 +205,6 @@ object TextOps {
     * Construction and scale shape are q110's, unchanged — see the q110
     * QueryDef scaladoc for the full design notes. */
   def sparseRanked(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val words = Tables.load(s, dir, "documents")
       .select(col("doc_id"), explode(split(trim(col("text")), " ")).as("w"))
       .filter(col("w") =!= "")
@@ -226,9 +225,8 @@ object TextOps {
           |  / (tfc + 1.2e0 * (1.0e0 - 7.5e-1 + 7.5e-1 * nd / (tot / nn)))) AS bigint)"""
           .stripMargin).as("contrib"))
       .groupBy("qid", "doc_id").agg(sum("contrib").as("sc"))
-    // r18 (VERDICT r17 #7): top-k via the native graft_topk aggregate —
-    // same bounded (score DESC, doc_id ASC) state the typed TopKAggregator
-    // kept, minus the object boundary (no DeserializeToObject/
+    // Top-k via the native graft_topk aggregate: bounded (score DESC,
+    // doc_id ASC) state with no object boundary (no DeserializeToObject/
     // SerializeFromObject, rows stay UnsafeRows through ObjectHashAggregate
     // with map-side partials). Rank = position in the sorted top array.
     scored.groupBy("qid")
@@ -303,7 +301,6 @@ object TextOps {
       .agg(count(lit(1)).as("c"), sum("nw").as("tk"))
 
   def selfRepStrip(docs: DataFrame, n: Int = IntraN): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val w = docs.select(col("doc_id"), split(trim(col("text")), " ").as("w"))
     val pos = w.select(col("doc_id"), posexplode(col("w")).as(Seq("i", "wd")))
     val gr = w.filter(size(col("w")) >= n)
@@ -937,7 +934,6 @@ object TextOps {
         // interpreted at ~0.3 ms/doc — see functions/RepStats.scala), and
         // counts stay integral until one final double division per metric
         // (engine-exact, so the DuckDB oracle hash-matches).
-        graft.functions.GraftFunctions.register(s)
         Tables.load(s, dir, "documents")
           .withColumn("ws", split(trim(col("text")), " "))
           .withColumn("n_words", size(col("ws")).cast("long"))
@@ -1292,24 +1288,21 @@ object TextOps {
              |FROM sel WHERE c < r16 // 16 OR nib < r16 % 16
              |ORDER BY doc_id, copy_id""".stripMargin)),
 
-    // ── Top-k per group via a custom typed Aggregator (UDAF surface) ──
+    // ── Top-k per group via the bounded graft_topk aggregate ──
     QueryDef(
       "q55_topk_aggregator",
       (s, dir) => {
-        import s.implicits._
         // Bounded O(k) partial-aggregation state per group — no per-group
-        // sort shuffle (graft.functions.TopKAggregator). The window
-        // formulation is the oracle: identical results, different plan.
-        val ds = Tables.load(s, dir, "documents")
+        // sort shuffle (graft.functions.TopKRows), emitted through q79's
+        // posexplode. The window formulation is the oracle: identical
+        // results, different plan.
+        Tables.load(s, dir, "documents")
           .select(col("lang"), col("doc_id"), col("n_chars").cast("long").as("score"))
-          .as[(String, Long, Long)]
-        ds.groupByKey(_._1)
-          .mapValues(t => graft.functions.Scored(t._2, t._3))
-          .agg(new graft.functions.TopKAggregator(3).toColumn.name("top"))
-          .flatMap { case (lang, items) =>
-            items.zipWithIndex.map { case (it, i) => (lang, i + 1L, it.doc_id, it.score) }
-          }
-          .toDF("lang", "rk", "doc_id", "score")
+          .groupBy("lang")
+          .agg(expr("graft_topk(score, doc_id, 3)").as("top"))
+          .select(col("lang"), posexplode(col("top")))
+          .select(col("lang"), (col("pos") + 1).cast("long").as("rk"),
+            col("col.doc_id").as("doc_id"), col("col.score").as("score"))
           .orderBy("lang", "rk")
       },
       Some("""SELECT lang, rk, doc_id, score FROM (
@@ -1332,11 +1325,7 @@ object TextOps {
         // with map-side combine, never a per-stratum window — with 4 langs
         // and a 100 TB corpus, a lang-keyed window would concentrate a
         // quarter of the corpus per task (the q58 lesson), while this
-        // plans as an ordinary partial+final aggregation. r18: the typed
-        // TopKAggregator path (which deserialized EVERY corpus row to a
-        // Scala object) swapped for the native aggregate — identical
-        // (score DESC, doc_id ASC) selection, TopKSpec pins it.
-        graft.functions.GraftFunctions.register(s)
+        // plans as an ordinary partial+final aggregation.
         Tables.load(s, dir, "documents")
           .select(col("lang"), col("doc_id"),
             expr("-graft_hash60(cast(doc_id AS string))").as("score"))
@@ -1702,7 +1691,6 @@ object TextOps {
         // point this SAME plan degrades gracefully to one b-keyed linear
         // shuffle join (never corpus²); the corpus side stays a narrow
         // ≤1-per-word explode either way.
-        graft.functions.GraftFunctions.register(s)
         val bg = Tables.load(s, dir, "documents")
           .select(col("doc_id"), split(trim(col("text")), " ").as("w"))
           .filter(size(col("w")) >= 2)
@@ -1804,7 +1792,7 @@ object TextOps {
         // a bigint (the q95 discipline), so the per-document score is an
         // integer SUM — order-free and hash-exact — where a double sum
         // would drift with partition order. Top-k per query via the
-        // bounded TopKAggregator ((score DESC, doc_id) total order), never
+        // bounded graft_topk ((score DESC, doc_id) total order), never
         // a corpus-wide rank window. Body factored as `sparseRanked` so
         // the q161 hybrid fusion consumes the exact graded ranking.
         //
@@ -2167,7 +2155,6 @@ object TextOps {
         // an interpreted lambda), then ONE doc_id-keyed partial+final
         // agg; the weight is computed arithmetic, so there is no model
         // join at all. Score state per doc = two longs.
-        graft.functions.GraftFunctions.register(s)
         val B = 1048576L
         val feats = Tables.load(s, dir, "documents")
           .select(col("doc_id"), split(trim(col("text")), " ").as("ws"))

@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
-import graft.functions.GraftFunctions
 
 /** Similarity search over the `embeddings` table (`Array[Float]` vectors):
   * brute-force cosine top-k as the exact baseline, SRP-LSH-blocked cosine
@@ -51,7 +50,6 @@ object Vectors {
     * replaces (same fold-order norm, same per-element double division),
     * but a primitive loop instead of an interpreted HigherOrderFunction. */
   def withNormalized(df: DataFrame): DataFrame = {
-    GraftFunctions.register(df.sparkSession) // idempotent; dot() needs it
     df.withColumn("en", call_function("graft_l2norm", col("e")))
   }
 
@@ -295,7 +293,6 @@ object Vectors {
     * (near-dup) and q59 (kNN join) — the blocking structure is the same;
     * only the verification differs. */
   def srpCandidates(emb: DataFrame, params: DataFrame): DataFrame = {
-    GraftFunctions.register(emb.sparkSession)
     val bx = emb.crossJoin(broadcast(params))
       .select(col("vec_id"),
         posexplode(call_function("graft_srpkeys",
@@ -789,7 +786,6 @@ object Vectors {
         // scheduling, and cosine is scale-invariant so the raw integer sum
         // vector (never divided by n) feeds the sequential-fold dot
         // directly.
-        GraftFunctions.register(s)
         val comp = Tables.embeddings(s, dir)
           .select(col("label"), posexplode(col("e")).as(Seq("i", "v")))
           .groupBy("label", "i")
@@ -891,7 +887,6 @@ object Vectors {
         // shuffled, there is no per-label window (the threshold form
         // keeps the flag a projection; a rank-based tail would window
         // the corpus by label — the q79 anti-shape).
-        GraftFunctions.register(s)
         val emb = Tables.embeddings(s, dir)
         val comp = emb
           .select(col("label"), posexplode(col("e")).as(Seq("i", "v")))
@@ -1168,7 +1163,7 @@ object Vectors {
         // of small integers, identical IEEE in both engines.
         //
         // 100 TB shape: both inputs are the already-bounded top-RetrK
-        // lists (TopKAggregator state, never a corpus rank window) — the
+        // lists (graft_topk state, never a corpus rank window) — the
         // fusion itself joins two ≤ Q·RetrK frames and ranks within
         // ≤ 2·RetrK candidates per query. The corpus is touched exactly
         // twice: once by the sparse postings pipeline, once by the dense
@@ -1224,12 +1219,11 @@ object Vectors {
         // primitive loops computed ONCE per corpus row below the join;
         // the broadcast query row fan-out then costs only the dots. All
         // three variant rankings ride one scan (3-struct explode into the
-        // (p, qid)-keyed bounded TopKAggregator — never a corpus rank
+        // (p, qid)-keyed bounded graft_topk — never a corpus rank
         // window); the overlap join runs on ≤ 3·Q·MatK rows. The tiny
         // top frame fans out into the full/prefix split, so it is
         // localCheckpoint-barrier'd (the q59 pattern; JobCountSpec lists
         // q162 eager-by-design).
-        GraftFunctions.register(s)
         val emb = Tables.embeddings(s, dir).select(col("vec_id"),
           call_function("graft_l2norm", col("e")).as("enf"),
           call_function("graft_l2norm", expr(s"slice(e, 1, ${MatPrefixes(0)})")).as("en8"),
@@ -1246,9 +1240,8 @@ object Vectors {
                |  named_struct('p', ${MatPrefixes(1)}, 'sc', cast(floor(1.0e9 * graft_dot(en16, qn16)) AS bigint))))"""
               .stripMargin).as("v"))
           .select(col("qid"), col("vec_id"), col("v.p").as("p"), col("v.sc").as("sc"))
-          // r18 (VERDICT r17 #7): graft_topk replaces the typed
-          // TopKAggregator path — identical bounded (sc DESC, vec_id ASC)
-          // selection per (p, qid), no object boundary (see sparseRanked).
+          // Bounded (sc DESC, vec_id ASC) selection per (p, qid), no
+          // object boundary (see sparseRanked).
           .groupBy("p", "qid")
           .agg(expr(s"graft_topk(sc, vec_id, $MatK)").as("top"))
           .select(col("p"), col("qid"),
@@ -1302,14 +1295,13 @@ object Vectors {
     * query rows broadcast over ONE normalized corpus scan, per-document
     * scores fixed-point floored to bigints (floor(1e9·cos) — the q110
     * discipline, so ranking and hash compare are integer-exact), top-k via
-    * the bounded TopKAggregator, never a corpus-wide rank window. The
+    * the bounded graft_topk aggregate, never a corpus-wide rank window. The
     * dense half of the q161 fusion. */
   def denseRanked(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     val emb = withNormalized(Tables.embeddings(s, dir)).select(col("vec_id"), col("en"))
     val q = emb.filter(col("vec_id") < TextOps.RetrQ)
       .select(col("vec_id").as("qid"), col("en").as("qn"))
-    // r18 (VERDICT r17 #7): graft_topk replaces the typed TopKAggregator
-    // path — same bounded (score DESC, vec_id ASC) top-k, no object
+    // Bounded (score DESC, vec_id ASC) top-k via graft_topk, no object
     // boundary around the aggregation (see TextOps.sparseRanked).
     emb.filter(col("vec_id") >= TextOps.RetrQ)
       .crossJoin(broadcast(q))
@@ -1338,7 +1330,6 @@ object Vectors {
     * reconstruction MSE is non-increasing per round (VectorsPqSpec pins
     * it on clustered data). */
   def pqCodebook(emb: DataFrame, refine: Int = 0): DataFrame = {
-    GraftFunctions.register(emb.sparkSession)
     val par = emb.agg(count(lit(1)).as("n"))
       .withColumn("step", expr(s"greatest(CAST(1 AS BIGINT), n div $PqK)"))
       .select("step")
@@ -1397,7 +1388,6 @@ object Vectors {
     * fold. The argmin struct and the `graft_dot` distance expression are
     * byte-for-byte unchanged (oracle-pinned double fold). */
   def pqAssign(emb: DataFrame, cb: DataFrame): DataFrame = {
-    GraftFunctions.register(emb.sparkSession)
     val nested = cb.select(expr(
       s"""transform(sequence(0, ${PqM - 1}), s ->
          |  filter(cb, c -> c.s = s))""".stripMargin).as("cbs"))
@@ -1469,7 +1459,6 @@ object Vectors {
     * ALREADY-BUILT (loaded) centroid structure. */
   def assignWithIndex(emb: DataFrame, coarseArr: DataFrame,
       fineCells: DataFrame): DataFrame = {
-    GraftFunctions.register(emb.sparkSession)
     assignCells(emb, coarseArr, fineCells)
   }
 
@@ -1507,7 +1496,6 @@ object Vectors {
     * (refined fine centroids are re-routed to their nearest coarse cell
     * each round). */
   def ivfIndex(emb: DataFrame, refine: Int = 0): (DataFrame, DataFrame, DataFrame) = {
-    GraftFunctions.register(emb.sparkSession)
     // (n → k, step, k1, step1) folded into the plan as a broadcast 1-row
     // aggregate — exactly the oracle's `par` CTE shape — instead of a
     // driver-side emb.count() job (VERDICT r3 #4). count(1) prunes every

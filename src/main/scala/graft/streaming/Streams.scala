@@ -301,7 +301,6 @@ object Streams {
     import graft.operators.Dedup
     val spark = docs.sparkSession
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val n = Dedup.ShingleN
     val rows = Dedup.NumHashes / Dedup.Bands
     // One narrow projection carries everything a bucket needs: the band

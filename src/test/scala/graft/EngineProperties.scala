@@ -84,7 +84,6 @@ object EngineProperties extends Properties("graft") {
   property("graft_repstats equals the declarative distinct/bigram/top-count triple") =
     Prop.forAll(Gen.listOfN(5, doc)) { docs =>
       import spark.implicits._
-      graft.functions.GraftFunctions.register(spark)
       val df = docs.zipWithIndex.map { case (ws, i) => (i.toLong, ws.mkString(" ")) }
         .toDF("doc_id", "text")
         .withColumn("ws", split(trim(col("text")), " "))
@@ -150,7 +149,6 @@ object EngineProperties extends Properties("graft") {
   property("graft_hash60 equals the conv(substr(md5)) SQL fold (null rows incl.)") =
     Prop.forAll(Gen.listOfN(8, oddStringOrNull)) { ss =>
       import spark.implicits._
-      graft.functions.GraftFunctions.register(spark)
       val df = ss.toDF("s")
       df.select(
           expr("graft_hash60(s)"),
@@ -164,7 +162,6 @@ object EngineProperties extends Properties("graft") {
     Prop.forAll(Gen.listOfN(4, oddWords),
         Gen.chooseNum(1, 4)) { (docs, n) =>
       import spark.implicits._
-      graft.functions.GraftFunctions.register(spark)
       val df = docs.map(ws => Tuple1(ws)).toDF("w")
       df.select(
           expr(s"graft_gramhashes(w, $n)"),
@@ -178,7 +175,6 @@ object EngineProperties extends Properties("graft") {
     Prop.forAll(Gen.listOfN(4, oddWords),
         Gen.chooseNum(1, 4)) { (docs, n) =>
       import spark.implicits._
-      graft.functions.GraftFunctions.register(spark)
       val df = docs.map(ws => Tuple1(ws)).toDF("w")
       df.select(
           expr(s"graft_gramstrings(w, $n)"),
@@ -191,7 +187,6 @@ object EngineProperties extends Properties("graft") {
   property("graft_cmsbuckets equals the per-j salted md5 lambda") =
     Prop.forAll(Gen.listOfN(8, oddString)) { ss =>
       import spark.implicits._
-      graft.functions.GraftFunctions.register(spark)
       val df = ss.toDF("v")
       df.select(
           expr("graft_cmsbuckets(v, 4, 2048)"),
@@ -209,7 +204,6 @@ object EngineProperties extends Properties("graft") {
   property("graft_cmsbuckets null input yields NULL (documented divergence)") =
     Prop.forAll(Gen.const(0)) { _ =>
       import spark.implicits._
-      graft.functions.GraftFunctions.register(spark)
       val df = Seq(Option.empty[String]).toDF("v")
       val r = df.select(
         expr("graft_cmsbuckets(v, 4, 2048)"),
@@ -257,7 +251,6 @@ object EngineProperties extends Properties("graft") {
     Prop.forAll(Gen.listOfN(16, editPair), Gen.listOfN(4, Gen.zip(rawString, rawString))) {
       (pairs, raw) =>
         import spark.implicits._
-        graft.functions.GraftFunctions.register(spark)
         val text = pairs.toDF("a", "b")
         val bytes = raw.toDF("x", "y").selectExpr("cast(x AS string) AS a", "cast(y AS string) AS b")
         text.union(bytes)
@@ -273,7 +266,6 @@ object EngineProperties extends Properties("graft") {
           1 -> Gen.const(None))))))) { arrays =>
       import org.apache.spark.sql.Row
       import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
-      graft.functions.GraftFunctions.register(spark)
       val rows: Seq[Row] = arrays.map(a =>
         Row(a.map(xs => xs.map(_.map(x => Long.box(x)).orNull)).orNull))
       val df = spark.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(Seq(

@@ -187,7 +187,7 @@ class PlanSpec extends AnyFunSuite {
     windows.foreach(w => assert(w.partitionSpec.nonEmpty, "unkeyed window = all rows to one partition"))
   }
 
-  test("q55 typed top-k aggregator plans without a window (bounded state, no per-group sort)") {
+  test("q55 graft_topk plans without a window (bounded state, no per-group sort)") {
     assert(collectAll("q55_topk_aggregator") { case w: WindowExec => w }.isEmpty)
   }
 
@@ -592,7 +592,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("q110 retrieval: query terms broadcast; top-k is bounded aggregation, not a window") {
     assert(collectAll("q110_sparse_retrieval") { case w: WindowExec => w }.isEmpty,
-      "top-k must be the bounded TopKAggregator, never a rank window")
+      "top-k must be the bounded graft_topk aggregate, never a rank window")
     assert(collectAll("q110_sparse_retrieval") {
       case j: org.apache.spark.sql.execution.joins.CartesianProductExec => j
     }.isEmpty)
@@ -1046,7 +1046,7 @@ class PlanSpec extends AnyFunSuite {
     // denseRanked pin. Downstream must stay catalog-sized: no window, no
     // product, overlap joins keyed on (p, qid, doc_id) columns only.
     assert(collectAll("q162_matryoshka_fidelity") { case w: WindowExec => w }.isEmpty,
-      "all three rankings must ride the bounded TopKAggregator, never a rank window")
+      "all three rankings must ride the bounded graft_topk aggregate, never a rank window")
     assert(collectAll("q162_matryoshka_fidelity") {
       case j: org.apache.spark.sql.execution.joins.CartesianProductExec => j
     }.isEmpty)

@@ -8,7 +8,7 @@ import graft.SharedSpark
 /** DotProduct must be bit-identical to the declarative fold it replaces
   * (same left-to-right accumulation), and null-correct. */
 class DotProductSpec extends AnyFunSuite {
-  private lazy val spark = { val s = SharedSpark.spark; GraftFunctions.register(s); s }
+  private lazy val spark = SharedSpark.spark
 
   private def foldDot = expr(
     "aggregate(zip_with(a, b, (x, y) -> x * y), CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)")

@@ -14,7 +14,6 @@ class PhashSigSpec extends AnyFunSuite {
   private lazy val spark = SharedSpark.spark
 
   test("bins is honored: width follows the literal, empty bins marked") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq("one two three four five", "one two", "").toDF("text")
       .select(call_function("graft_phashsig",

@@ -5,14 +5,12 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SharedSpark
 
-/** graft_topk (the native TypedImperativeAggregate, r18) must select and
-  * order EXACTLY like the typed TopKAggregator it replaced at the
-  * sparseRanked/denseRanked/q79/q162 call sites: k best under the total
-  * order (score DESC, id ASC), emitted in that order. Equivalence is
-  * pinned against both the typed aggregator and the window row_number
-  * formulation, on data with heavy score ties and adversarial k. */
+/** graft_topk (the native TypedImperativeAggregate) must select and order
+  * EXACTLY like the window row_number formulation the oracles use: k best
+  * under the total order (score DESC, id ASC), emitted in that order.
+  * Pinned on data with heavy score ties and adversarial k. */
 class TopKRowsSpec extends AnyFunSuite {
-  private lazy val spark = { val s = SharedSpark.spark; GraftFunctions.register(s); s }
+  private lazy val spark = SharedSpark.spark
 
   /** Deterministic pseudo-random rows with many score ties: (g, id, sc). */
   private def rows(n: Int): Seq[(Long, Long, Long)] =
@@ -30,40 +28,23 @@ class TopKRowsSpec extends AnyFunSuite {
       .select(col("g"), (col("pos") + 1).cast("long").as("rk"),
         col("col.doc_id").as("id"), col("col.score").as("sc"))
 
-  test("equals the typed TopKAggregator on tie-heavy data, k = 1/5/bigger-than-group") {
-    import spark.implicits._
-    val data = rows(5000)
-    val df = data.toDF("g", "id", "sc")
-    for (k <- Seq(1, 5, 10000)) {
-      val native = nativeTopK(df, k)
-        .orderBy("g", "rk").collect().map(_.toSeq.toList).toList
-      val typed = df.as[(Long, Long, Long)]
-        .groupByKey(_._1)
-        .mapValues(t => Scored(t._2, t._3))
-        .agg(new TopKAggregator(k).toColumn.name("top"))
-        .flatMap { case (g, items) =>
-          items.zipWithIndex.map { case (it, i) => (g, i + 1L, it.doc_id, it.score) }
-        }
-        .toDF("g", "rk", "id", "sc")
-        .orderBy("g", "rk").collect().map(_.toSeq.toList).toList
-      assert(native === typed, s"k=$k")
-    }
-  }
-
   test("equals the window row_number formulation (the oracle shape)") {
     import spark.implicits._
-    val df = rows(3000).toDF("g", "id", "sc")
+    val df = rows(5000).toDF("g", "id", "sc")
     df.createOrReplaceTempView("topk_in")
-    val win = spark.sql(
-      """SELECT g, rk, id, sc FROM (
-        |  SELECT g, id, sc,
-        |         CAST(row_number() OVER (PARTITION BY g
-        |           ORDER BY sc DESC, id) AS BIGINT) AS rk
-        |  FROM topk_in) WHERE rk <= 5""".stripMargin)
-      .orderBy("g", "rk").collect().map(_.toSeq.toList).toList
-    val native = nativeTopK(df, 5)
-      .orderBy("g", "rk").collect().map(_.toSeq.toList).toList
-    assert(native === win)
+    // k = 1, a mid k, and k bigger than every group (7 groups of ~700)
+    for (k <- Seq(1, 5, 10000)) {
+      val win = spark.sql(
+        s"""SELECT g, rk, id, sc FROM (
+          |  SELECT g, id, sc,
+          |         CAST(row_number() OVER (PARTITION BY g
+          |           ORDER BY sc DESC, id) AS BIGINT) AS rk
+          |  FROM topk_in) WHERE rk <= $k""".stripMargin)
+        .orderBy("g", "rk").collect().map(_.toSeq.toList).toList
+      val native = nativeTopK(df, k)
+        .orderBy("g", "rk").collect().map(_.toSeq.toList).toList
+      assert(native === win, s"k=$k")
+    }
   }
 
   test("null score or id rows are skipped; plan carries no typed boundary") {

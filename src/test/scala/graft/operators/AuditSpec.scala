@@ -330,7 +330,6 @@ class AuditSpec extends AnyFunSuite {
     // Self-consistency of the machinery: ranking by the re-normalized
     // 64-prefix (the whole vector) must reproduce the full ranking.
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, dir).select(col("vec_id"),
       call_function("graft_l2norm", col("e")).as("enf"),
       call_function("graft_l2norm", expr("slice(e, 1, 10000)")).as("enp"))

@@ -37,7 +37,6 @@ class PlacementSpec extends AnyFunSuite {
 
   test("q186 HRW: codegen'd graft_hrw ≡ declarative twin ≡ scalar MD5 argmax (both fleet sizes)") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val got = (0L until 200L).toDF("doc_id")
       .withColumn("s8", call_function("graft_hrw", col("doc_id"), lit(Eval.RvOld)))
       .withColumn("s9", call_function("graft_hrw", col("doc_id"), lit(Eval.RvNew)))
@@ -58,7 +57,6 @@ class PlacementSpec extends AnyFunSuite {
   }
 
   test("graft_hrw builder: BIGINT literal accepted; arity vs type errors distinguished (ADVICE r15)") {
-    graft.functions.GraftFunctions.register(spark)
     // SQL long literal (the 8L form) folds to the same loop as the INT one
     val viaLong = spark.sql(
       "SELECT graft_hrw(CAST(7 AS BIGINT), 8L) AS s").head().getLong(0)
